@@ -40,14 +40,19 @@ object Closure {
   val DefaultMaxDistributedEdges = 10000000L
 
   /** Preference boundary between the driver BFS and the distributed
-    * build inside [[closureAuto]]: below it the driver BFS wins (ms-scale
-    * build, tiny artifact — the ABAC case); above it the distributed
-    * build's parallel artifact serves warm queries ~4x faster than a
-    * driver-materialized one and its build parallelizes (measured at the
-    * 15k-edge sf0.1 trust chain: warm 97 ms vs 366 ms; build 5.6 s vs
-    * 4.2 s single-threaded — and the gap inverts further with size).
+    * build inside [[closureAuto]] and [[pathCountsAuto]]. Below it the
+    * driver BFS builds in milliseconds and its artifact is small — the
+    * ABAC and WoT case: point probes are answered from its [[PathIndex]]
+    * with no Spark job, and joins read the small cached frame. The
+    * boundary was set from DataFrame point probes over the cached closure
+    * (15k-edge sf0.1 trust chain: warm 97 ms over the distributed
+    * artifact vs 366 ms over the driver-built one), a cost driver-tier
+    * point probes no longer pay. It stays for the relational consumers
+    * that still read the frame (r3, r4) and for the build: the BFS is
+    * single-threaded (4.2 s vs the distributed 5.6 s at 15k edges, a gap
+    * that inverts with size) and its closure lives on the driver heap.
     * The 100k hard driver cap stays as the memory-safety bound for
-    * explicit closureSmall callers.
+    * explicit closureSmall/closureIndex callers.
     */
   val DriverPreferredMaxEdges = 10000L
 
@@ -74,9 +79,70 @@ object Closure {
   // per (hierarchy version, depth) and reused across decisions — at scale
   // they'd be persisted beside the hierarchy. Memoized only when the edge
   // plan has a nameable content identity (PlanKeys); a mutated snapshot
-  // mints a fresh key, a driver-local edge set recomputes.
+  // mints a fresh key, a driver-local edge set recomputes. Each closure
+  // entry records whether the driver tier built it, so a later
+  // pathCountsAuto knows its tier without probing the size again.
   private val closureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Boolean)]()
+  // The driver tier's point-lookup indexes, under the same keys.
+  private val indexCache =
+    new java.util.concurrent.ConcurrentHashMap[String, PathIndex]()
+
+  /** Memo insert shared by both caches. Bounded like the other artifact
+    * memos: evicting wholesale past 32 entries, releasing each (the
+    * cached closures are unpersisted so the block store doesn't
+    * accumulate dead columnar batches in a resident service replaying
+    * many hierarchy versions).
+    */
+  private def remember[T](cache: java.util.concurrent.ConcurrentHashMap[String, T],
+      key: String, value: => T)(release: T => Unit): T = {
+    if (cache.size > 32) {
+      cache.values.forEach(v => try release(v) catch { case _: Exception => () })
+      cache.clear()
+    }
+    cache.computeIfAbsent(key, _ => value)
+  }
+
+  // Caps are part of the key: callers forcing a tier (a zero driver cap
+  // routes to the distributed build) must not be served an artifact
+  // another cap configuration built, even though the rows are provably
+  // identical — the memo entry's lifecycle and build path belong to the
+  // configuration that requested it.
+  private def memoKey(edges: DataFrame, maxDepth: Int, parentCol: String,
+      childCol: String, maxEdges: Long, maxDistributedEdges: Long): Option[String] =
+    graft.PlanKeys.planKey(edges).map(key =>
+      s"$key:$maxDepth:$parentCol:$childCol:$maxEdges:$maxDistributedEdges")
+
+  /** The tier gate: driver BFS only below BOTH the caller's cap and the
+    * measured preference boundary — past ~10k edges the distributed build
+    * wins even though the graph would still fit the driver (see
+    * DriverPreferredMaxEdges).
+    */
+  private def onDriverTier(edges: DataFrame, maxEdges: Long): Boolean =
+    fitsDriver(edges, math.min(maxEdges, DriverPreferredMaxEdges))
+
+  /** The closure frame on an already chosen tier, memoized under `key`:
+    * [[closureSmall]] on the driver tier, else [[closureDistributed]]
+    * when the graph fits the distributed cap (size-probe reuse: fitsDriver
+    * only runs a bounded count, it does not collect; the distributed build
+    * never moves edges to the driver), else None.
+    */
+  private def closureOnTier(key: Option[String], onDriver: Boolean,
+      edges: DataFrame, maxDepth: Int, parentCol: String, childCol: String,
+      maxEdges: Long, maxDistributedEdges: Long): Option[DataFrame] = {
+    val built =
+      if (onDriver) Some(closureSmall(edges, maxDepth, parentCol, childCol, maxEdges))
+      else if (fitsDriver(edges, maxDistributedEdges))
+        closureDistributed(edges, maxDepth, parentCol, childCol)
+      else None
+    // Memo-owned .cache(): a LocalRelation closure re-pays a
+    // single-threaded driver scan of up to maxDepth×maxEdges rows on
+    // EVERY query otherwise; cached, warm queries read columnar batches.
+    // Deliberately not CacheRegistry-registered — the artifact's lifetime
+    // is the memo entry's, like the IVF index.
+    key.fold(built)(k => built.map(c =>
+      remember(closureCache, k, (c.cache(), onDriver))(_._1.unpersist())._1))
+  }
 
   /** Auto entry point — three regimes by hierarchy size:
     *   1. fits the driver cap → [[closureSmall]] (driver BFS, broadcast);
@@ -91,47 +157,39 @@ object Closure {
       parentCol: String = "parent", childCol: String = "child",
       maxEdges: Long = DefaultMaxEdges,
       maxDistributedEdges: Long = DefaultMaxDistributedEdges): Option[DataFrame] = {
-    def build(): Option[DataFrame] =
-      // Driver BFS only below BOTH the caller's cap and the measured
-      // preference boundary — past ~10k edges the distributed build's
-      // parallel artifact wins warm queries even though the graph would
-      // still fit the driver (see DriverPreferredMaxEdges).
-      if (fitsDriver(edges, math.min(maxEdges, DriverPreferredMaxEdges)))
-        Some(closureSmall(edges, maxDepth, parentCol, childCol, maxEdges))
-      else if (fitsDriver(edges, maxDistributedEdges))
-        // Size-probe reuse: fitsDriver only runs a bounded count, it does
-        // not collect; the distributed build never moves edges to the
-        // driver.
-        closureDistributed(edges, maxDepth, parentCol, childCol)
-      else None
-    graft.PlanKeys.planKey(edges) match {
-      case Some(key) =>
-        // Caps are part of the key: callers forcing a tier (a zero driver
-        // cap routes to the distributed build) must not be served an
-        // artifact another cap configuration built, even though the rows
-        // are provably identical — the memo entry's lifecycle and build
-        // path belong to the configuration that requested it.
-        val full = s"$key:$maxDepth:$parentCol:$childCol:$maxEdges:$maxDistributedEdges"
-        Option(closureCache.get(full)).orElse {
-          build().map { closure =>
-            // Bounded like the other artifact memos: evicting wholesale
-            // past 32 entries, unpersisting the cached closures so the
-            // block store doesn't accumulate dead columnar batches in a
-            // resident service replaying many hierarchy versions.
-            if (closureCache.size > 32) {
-              closureCache.values.forEach(df =>
-                try df.unpersist() catch { case _: Exception => () })
-              closureCache.clear()
-            }
-            // Memo-owned .cache(): a LocalRelation closure re-pays a
-            // single-threaded driver scan of up to maxDepth×maxEdges rows
-            // on EVERY query otherwise; cached, warm queries read columnar
-            // batches. Deliberately not CacheRegistry-registered — the
-            // artifact's lifetime is the memo entry's, like the IVF index.
-            closureCache.computeIfAbsent(full, _ => closure.cache())
-          }
-        }
-      case None => build()
+    val key = memoKey(edges, maxDepth, parentCol, childCol, maxEdges,
+      maxDistributedEdges)
+    key.flatMap(k => Option(closureCache.get(k))).map(_._1).orElse(
+      closureOnTier(key, onDriverTier(edges, maxEdges), edges, maxDepth,
+        parentCol, childCol, maxEdges, maxDistributedEdges))
+  }
+
+  /** Point-probe entry point — the bounded closure in the form its tier
+    * answers `(src, dst, ≤ L hops)` counts from, on the same gate and
+    * memo keys as [[closureAuto]]:
+    *   - driver tier → Left([[PathIndex]]): a probe is a hash lookup and
+    *     a binary search on the driver, no Spark job; no closure frame is
+    *     built or cached;
+    *   - distributed tier → Right(the cached closure frame), as
+    *     closureAuto returns it;
+    *   - else None — the caller must walk.
+    * A memo hit on either form skips the size probe.
+    */
+  def pathCountsAuto(edges: DataFrame, maxDepth: Int,
+      parentCol: String = "parent", childCol: String = "child",
+      maxEdges: Long = DefaultMaxEdges,
+      maxDistributedEdges: Long = DefaultMaxDistributedEdges)
+      : Option[Either[PathIndex, DataFrame]] = {
+    val key = memoKey(edges, maxDepth, parentCol, childCol, maxEdges,
+      maxDistributedEdges)
+    key.flatMap(k => Option(indexCache.get(k))).map(Left(_)).orElse {
+      val framed = key.flatMap(k => Option(closureCache.get(k)))
+      if (framed.fold(onDriverTier(edges, maxEdges))(_._2)) {
+        val index = closureIndex(edges, maxDepth, parentCol, childCol, maxEdges)
+        Some(Left(key.fold(index)(k => remember(indexCache, k, index)(_ => ()))))
+      } else framed.map(_._1).orElse(closureOnTier(key, onDriver = false,
+          edges, maxDepth, parentCol, childCol, maxEdges, maxDistributedEdges))
+        .map(Right(_))
     }
   }
 
@@ -215,6 +273,41 @@ object Closure {
       parentCol: String = "parent", childCol: String = "child",
       maxEdges: Long = DefaultMaxEdges): DataFrame = {
     val spark = edges.sparkSession
+    import spark.implicits._
+    val out = driverWalks(edges, maxDepth, parentCol, childCol, maxEdges)
+    val df = out.toSeq.toDF("src", "dst", "lvl", "n_paths")
+    // A driver-built closure is a single-partition LocalRelation; once it
+    // grows past trivial size, every warm query over the cached artifact
+    // would scan it on one core (measured: 3M rows ≈ 3.2 s/query at
+    // local[32] vs 0.14 s spread). Spread big artifacts at build time —
+    // and CLUSTER them: range-partitioned on src and sorted within
+    // partitions, the cached columnar batches carry tight src/dst
+    // min/max stats, so a reachability point probe (filter src=X) prunes
+    // to ~one batch instead of scanning the whole artifact
+    // (InMemoryTableScan batch pruning). One shuffle, paid once at
+    // build; tiny hierarchies (the common ABAC case) stay
+    // single-partition and skip the per-query many-task overhead.
+    if (out.length > 10000)
+      df.repartitionByRange(spark.sparkContext.defaultParallelism,
+          col("src"), col("dst"))
+        .sortWithinPartitions(col("src"), col("dst"))
+    else df
+  }
+
+  /** The rows of [[closureSmall]] as a driver-resident [[PathIndex]]:
+    * same edge cap, same BFS, same loud overflow.
+    */
+  def closureIndex(edges: DataFrame, maxDepth: Int,
+      parentCol: String = "parent", childCol: String = "child",
+      maxEdges: Long = DefaultMaxEdges): PathIndex =
+    PathIndex(driverWalks(edges, maxDepth, parentCol, childCol, maxEdges))
+
+  /** The driver tier's kernel: collects the edge list under the cap, then
+    * runs a multiplicity BFS from every node. One (src, dst, lvl, n_paths)
+    * row per walk length that reaches dst.
+    */
+  private def driverWalks(edges: DataFrame, maxDepth: Int, parentCol: String,
+      childCol: String, maxEdges: Long): Array[(String, String, Int, Long)] = {
     val es = edges.select(parentCol, childCol).limit(probeLimit(maxEdges))
       .collect().map(r => (r.getString(0), r.getString(1)))
     require(es.length <= maxEdges,
@@ -222,7 +315,7 @@ object Closure {
     val adj: Map[String, Array[String]] =
       es.groupBy(_._1).map { case (p, cs) => p -> cs.map(_._2) }
     val srcs = (es.map(_._1) ++ es.map(_._2)).distinct
-    val rows = Seq.newBuilder[(String, String, Int, Long)]
+    val rows = Array.newBuilder[(String, String, Int, Long)]
     srcs.foreach { src =>
       // Multiplicity BFS: frontier counts walks, not visited nodes.
       var frontier = Map(src -> 1L)
@@ -248,24 +341,73 @@ object Closure {
         lvl += 1
       }
     }
-    import spark.implicits._
-    val out = rows.result()
-    val df = out.toDF("src", "dst", "lvl", "n_paths")
-    // A driver-built closure is a single-partition LocalRelation; once it
-    // grows past trivial size, every warm query over the cached artifact
-    // would scan it on one core (measured: 3M rows ≈ 3.2 s/query at
-    // local[32] vs 0.14 s spread). Spread big artifacts at build time —
-    // and CLUSTER them: range-partitioned on src and sorted within
-    // partitions, the cached columnar batches carry tight src/dst
-    // min/max stats, so a reachability point probe (filter src=X) prunes
-    // to ~one batch instead of scanning the whole artifact
-    // (InMemoryTableScan batch pruning). One shuffle, paid once at
-    // build; tiny hierarchies (the common ABAC case) stay
-    // single-partition and skip the per-query many-task overhead.
-    if (out.length > 10000)
-      df.repartitionByRange(spark.sparkContext.defaultParallelism,
-          col("src"), col("dst"))
-        .sortWithinPartitions(col("src"), col("dst"))
-    else df
+    rows.result()
+  }
+
+  /** Point-lookup form of a driver-tier closure: for each (src, dst) the
+    * walk counts by length, kept as running sums over lvl, so "walks
+    * src→dst within L hops" is one lookup instead of a filter + sum over
+    * the closure rows. Columnar: the rows sorted by (src, dst, lvl) in
+    * three arrays (dst strings are shared with the collected edge list),
+    * and one map from each src to its row range.
+    */
+  final class PathIndex private (spans: Map[String, (Int, Int)],
+      dsts: Array[String], lvls: Array[Int], running: Array[Long]) {
+
+    /** `sum(n_paths)` over the closure rows (src, dst, lvl <= maxLvl);
+      * 0 when there are none.
+      */
+    def pathCount(src: String, dst: String, maxLvl: Long): Long =
+      spans.get(src) match {
+        case None => 0L
+        case Some((from, until)) =>
+          // Binary search for the first row past (dst, maxLvl); the row
+          // before it, if it is dst's, holds the running sum up to maxLvl.
+          var lo = from
+          var hi = until
+          while (lo < hi) {
+            val mid = (lo + hi) >>> 1
+            val c = dsts(mid).compareTo(dst)
+            if (c < 0 || (c == 0 && lvls(mid) <= maxLvl)) lo = mid + 1 else hi = mid
+          }
+          if (lo > from && dsts(lo - 1) == dst) running(lo - 1) else 0L
+      }
+  }
+
+  object PathIndex {
+    /** Index (src, dst, lvl, n_paths) rows, one per (src, dst, lvl). The
+      * running sums are checked like the BFS: a pair whose walks within
+      * maxDepth overflow Long fails the build rather than wrap. Rows with a
+      * null end are dropped — no equality probe can match them.
+      */
+    private[graph] def apply(rows: Array[(String, String, Int, Long)]): PathIndex = {
+      val sorted = rows.filter(r => r._1 != null && r._2 != null)
+        .sortBy(r => (r._1, r._2, r._3))
+      val n = sorted.length
+      val dsts = new Array[String](n)
+      val lvls = new Array[Int](n)
+      val running = new Array[Long](n)
+      val spans = Map.newBuilder[String, (Int, Int)]
+      var from = 0
+      for (i <- 0 until n) {
+        val (src, dst, lvl, cnt) = sorted(i)
+        dsts(i) = dst
+        lvls(i) = lvl
+        running(i) =
+          if (i > from && dsts(i - 1) == dst)
+            try Math.addExact(running(i - 1), cnt)
+            catch { case _: ArithmeticException =>
+              throw new ArithmeticException(
+                s"closureIndex: path count overflow from $src to $dst " +
+                  "— graph too dense for bag closure")
+            }
+          else cnt
+        if (i + 1 == n || sorted(i + 1)._1 != src) {
+          spans += src -> ((from, i + 1))
+          from = i + 1
+        }
+      }
+      new PathIndex(spans.result(), dsts, lvls, running)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.graph.{Closure, Traverse}
+import org.apache.spark.sql.functions.{col, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closure correctness: bag path multiplicities must equal the expanded
@@ -122,6 +123,84 @@ class ClosureSpec extends AnyFunSuite {
       Closure.closureSmall(dense, maxDepth = 20).count()
     }
     assert(ex.getMessage.contains("overflow"))
+  }
+
+  test("index lookups equal closureSmall's filter + sum on generated graphs") {
+    // For every (src, dst, L): PathIndex.pathCount == sum(n_paths) over
+    // closureSmall rows with that src and dst and lvl <= L. Node pools mix
+    // ASCII, multi-byte and 300-char ids; edges are drawn with
+    // replacement (duplicates) and may be self-loops or close cycles;
+    // the fixed cases add a diamond and an empty edge set.
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val ids = Seq("a", "b", "c", "d", "é", "节点", "\uD83D\uDE81drone",
+      "w" * 300, "w" * 299 + "x")
+    val graphGen = for {
+      pool <- Gen.choose(1, 6).flatMap(Gen.pick(_, ids))
+      edges <- Gen.choose(0, 14).flatMap(Gen.listOfN(_,
+        Gen.zip(Gen.oneOf(pool.toSeq), Gen.oneOf(pool.toSeq))))
+      depth <- Gen.choose(1, 5)
+    } yield (edges, depth)
+    val generated = (1 to 12).flatMap(i =>
+      graphGen(Gen.Parameters.default, Seed(101L + i)))
+    val diamond = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"),
+      ("d", "a"), ("a", "b"))
+    val cases = generated ++ Seq((diamond, 4), (Seq.empty[(String, String)], 3))
+    assert(generated.exists { case (es, _) => es.exists(e => e._1 == e._2) })
+    for ((es, depth) <- cases) {
+      val e = es.toDF("parent", "child")
+      val index = Closure.closureIndex(e, maxDepth = depth)
+      val lens = Seq(-1L, 0L, 1L, depth.toLong)
+      val sums = lens.map(l => sum(when(col("lvl") <= l, col("n_paths"))))
+      val want = Closure.closureSmall(e, maxDepth = depth)
+        .groupBy(col("src"), col("dst")).agg(sums.head, sums.tail: _*)
+        .collect().map(r => (r.getString(0), r.getString(1)) ->
+          lens.indices.map(i => if (r.isNullAt(i + 2)) 0L else r.getLong(i + 2)))
+        .toMap
+      val nodes = (es.flatMap(e => Seq(e._1, e._2)) :+ "absent").distinct
+      for (s <- nodes; d <- nodes; (l, i) <- lens.zipWithIndex) {
+        val expected = want.get((s, d)).fold(0L)(_(i))
+        assert(index.pathCount(s, d, l) == expected,
+          s"($s, $d, L=$l) depth $depth edges $es")
+      }
+    }
+    // The diamond's duplicate a→b edge makes three walks a→b→d, a→b→d,
+    // a→c→d.
+    assert(Closure.closureIndex(diamond.toDF("parent", "child"), maxDepth = 2)
+      .pathCount("a", "d", 2) == 3L)
+  }
+
+  test("closureIndex fails loudly on path-multiplicity overflow") {
+    val nodes = (0 until 20).map(i => s"n$i")
+    val dense = (for (a <- nodes; b <- nodes if a != b) yield (a, b))
+      .toDF("parent", "child")
+    val ex = intercept[ArithmeticException] {
+      Closure.closureIndex(dense, maxDepth = 20)
+    }
+    assert(ex.getMessage.contains("overflow"))
+  }
+
+  test("pathCountsAuto serves the driver tier as a memoized index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pc").toString
+    Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("parent", "child")
+      .write.mode("overwrite").parquet(dir)
+    val e = spark.read.parquet(dir)
+    // A closure frame memoized first does not hide the driver tier.
+    Closure.closureAuto(e, maxDepth = 3)
+    val first = Closure.pathCountsAuto(e, maxDepth = 3)
+    val index = first.flatMap(_.left.toOption)
+      .getOrElse(fail(s"driver tier must serve an index: $first"))
+    assert(index.pathCount("a", "c", 2) == 2L && index.pathCount("a", "c", 1) == 1L)
+    assert(Closure.pathCountsAuto(e, maxDepth = 3).flatMap(_.left.toOption)
+      .exists(_ eq index), "a repeated call must hit the memo")
+    // A zero driver cap takes the distributed tier: the closure frame.
+    val dist = Closure.pathCountsAuto(e, maxDepth = 3, maxEdges = 0L)
+      .flatMap(_.toOption).getOrElse(fail("distributed tier must serve the frame"))
+    assert(dist.as[(String, String, Int, Long)].collect().toSet ==
+      Closure.closureSmall(e, maxDepth = 3).as[(String, String, Int, Long)]
+        .collect().toSet)
+    assert(Closure.pathCountsAuto(e, maxDepth = 3, maxEdges = 2L,
+      maxDistributedEdges = 2L).isEmpty)
   }
 
   test("distributed closure fails loudly past Long-range multiplicities") {

@@ -53,6 +53,11 @@ object Closure {
     * that inverts with size) and its closure lives on the driver heap.
     * The 100k hard driver cap stays as the memory-safety bound for
     * explicit closureSmall/closureIndex callers.
+    *
+    * It is also the default gate of [[walkCountFrom]], the rooted chain
+    * count of the dynamic-topology replay (DynamicReplay.chainCount):
+    * below it one bounded collect and a BFS from the root replace the
+    * per-level jobs of a [[Traverse.expand]] walk.
     */
   val DriverPreferredMaxEdges = 10000L
 
@@ -268,6 +273,7 @@ object Closure {
     * the number of distinct walks src→dst of length lvl. Rows appear once
     * per (src, dst, lvl) — the bag cardinality rides in n_paths, so
     * `sum(n_paths)` over a join equals `count(*)` over the expanded walk.
+    * A null node starts and continues no walk; an edge into null ends one.
     */
   def closureSmall(edges: DataFrame, maxDepth: Int,
       parentCol: String = "parent", childCol: String = "child",
@@ -302,44 +308,92 @@ object Closure {
       maxEdges: Long = DefaultMaxEdges): PathIndex =
     PathIndex(driverWalks(edges, maxDepth, parentCol, childCol, maxEdges))
 
-  /** The driver tier's kernel: collects the edge list under the cap, then
-    * runs a multiplicity BFS from every node. One (src, dst, lvl, n_paths)
-    * row per walk length that reaches dst.
+  /** Rooted walk count on the driver tier: the number of walks of length
+    * 1..maxDepth from `root` — `count(*)` over [[Traverse.expand]] from a
+    * one-row seed — or None when `edges` holds more than `maxEdges` rows
+    * and the caller must walk. One bounded collect is both the size probe
+    * and the read; the count comes from the same BFS as the closure, with
+    * the same loud overflow (the sum over levels is checked too).
+    */
+  def walkCountFrom(edges: DataFrame, root: String, maxDepth: Int,
+      parentCol: String = "parent", childCol: String = "child",
+      maxEdges: Long = DriverPreferredMaxEdges): Option[Long] = {
+    require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
+    collectUnder(edges, parentCol, childCol, maxEdges).map { es =>
+      var n = 0L
+      walksFrom(adjacency(es), root, maxDepth) { (_, lvl, cnt) =>
+        n = try Math.addExact(n, cnt)
+          catch { case _: ArithmeticException =>
+            throw new ArithmeticException(
+              s"walkCountFrom: walk count overflow at lvl $lvl from $root " +
+                "— graph too dense for a bag count")
+          }
+      }
+      n
+    }
+  }
+
+  /** The (parent, child) edge list on the driver, or None past `maxEdges`:
+    * one `limit(maxEdges + 1)` collect, so the read is its own size probe.
+    */
+  private def collectUnder(edges: DataFrame, parentCol: String,
+      childCol: String, maxEdges: Long): Option[Array[(String, String)]] = {
+    val es = edges.select(parentCol, childCol).limit(probeLimit(maxEdges))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    if (es.length <= maxEdges) Some(es) else None
+  }
+
+  /** Children by parent, duplicates kept (each is one more walk). A null
+    * parent is left out: no equality join matches it, so no walk expands
+    * through a null node, as in [[Traverse.expand]].
+    */
+  private def adjacency(es: Array[(String, String)]): Map[String, Array[String]] =
+    es.filter(_._1 != null).groupBy(_._1).map { case (p, cs) => p -> cs.map(_._2) }
+
+  /** Multiplicity BFS from `src`: calls `emit(dst, lvl, walks)` once per
+    * node reached at each level 1..maxDepth — the frontier counts walks,
+    * not visited nodes. A null end is emitted at its level, then stops.
+    */
+  private def walksFrom(adj: Map[String, Array[String]], src: String,
+      maxDepth: Int)(emit: (String, Int, Long) => Unit): Unit = {
+    var frontier = Map(src -> 1L)
+    var lvl = 1
+    while (lvl <= maxDepth && frontier.nonEmpty) {
+      val next = scala.collection.mutable.Map[String, Long]()
+      frontier.foreach { case (node, cnt) =>
+        adj.getOrElse(node, Array.empty).foreach { c =>
+          // addExact: a dense graph under the edge cap can grow bag
+          // multiplicities past Long range (~b^lvl for branching b);
+          // a silent wrap would return wrong path counts where the
+          // distributed walk would at worst OOM loudly.
+          next(c) = try Math.addExact(next.getOrElse(c, 0L), cnt)
+            catch { case _: ArithmeticException =>
+              throw new ArithmeticException(
+                s"path multiplicity overflow at lvl $lvl from $src " +
+                  "— graph too dense for bag closure")
+            }
+        }
+      }
+      next.foreach { case (dst, cnt) => emit(dst, lvl, cnt) }
+      frontier = next.toMap
+      lvl += 1
+    }
+  }
+
+  /** The driver tier's closure kernel: collects the edge list under the
+    * cap, then runs [[walksFrom]] from every non-null node. One (src, dst,
+    * lvl, n_paths) row per walk length that reaches dst.
     */
   private def driverWalks(edges: DataFrame, maxDepth: Int, parentCol: String,
       childCol: String, maxEdges: Long): Array[(String, String, Int, Long)] = {
-    val es = edges.select(parentCol, childCol).limit(probeLimit(maxEdges))
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    require(es.length <= maxEdges,
+    val collected = collectUnder(edges, parentCol, childCol, maxEdges)
+    require(collected.isDefined,
       s"closureSmall: graph exceeds $maxEdges edges — use Traverse.expand")
-    val adj: Map[String, Array[String]] =
-      es.groupBy(_._1).map { case (p, cs) => p -> cs.map(_._2) }
-    val srcs = (es.map(_._1) ++ es.map(_._2)).distinct
+    val es = collected.get
+    val adj = adjacency(es)
     val rows = Array.newBuilder[(String, String, Int, Long)]
-    srcs.foreach { src =>
-      // Multiplicity BFS: frontier counts walks, not visited nodes.
-      var frontier = Map(src -> 1L)
-      var lvl = 1
-      while (lvl <= maxDepth && frontier.nonEmpty) {
-        val next = scala.collection.mutable.Map[String, Long]()
-        frontier.foreach { case (node, cnt) =>
-          adj.getOrElse(node, Array.empty).foreach { c =>
-            // addExact: a dense graph under the edge cap can grow bag
-            // multiplicities past Long range (~b^lvl for branching b);
-            // a silent wrap would return wrong path counts where the
-            // distributed walk would at worst OOM loudly.
-            next(c) = try Math.addExact(next.getOrElse(c, 0L), cnt)
-              catch { case _: ArithmeticException =>
-                throw new ArithmeticException(
-                  s"closureSmall: path multiplicity overflow at lvl $lvl " +
-                    s"from $src — graph too dense for bag closure")
-              }
-          }
-        }
-        next.foreach { case (dst, cnt) => rows += ((src, dst, lvl, cnt)) }
-        frontier = next.toMap
-        lvl += 1
-      }
+    (es.map(_._1) ++ es.map(_._2)).distinct.filter(_ != null).foreach { src =>
+      walksFrom(adj, src, maxDepth)((dst, lvl, cnt) => rows += ((src, dst, lvl, cnt)))
     }
     rows.result()
   }

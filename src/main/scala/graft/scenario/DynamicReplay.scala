@@ -1,7 +1,7 @@
 package graft.scenario
 
 import graft.Tables
-import graft.graph.Traverse
+import graft.graph.{Closure, Traverse}
 import graft.state.Snapshot
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *
   * This engine models the mutable delegation table as a snapshot +
   * [[graft.state.Snapshot.updateWhere]] rewrites, and the chain query as
-  * [[graft.graph.Traverse.expand]]. Two deliberate deviations from the
+  * a rooted walk count ([[chainCount]]). Two deliberate deviations from the
   * reference's *mechanics* (not its semantics):
   *
   *  - The reference samples update targets with `random.sample`; replay
@@ -32,8 +32,11 @@ import org.apache.spark.sql.functions._
   *    with the scale factor, so depth-16 walks are non-degenerate.
   *
   * Scale design: mutations are narrow `CASE` rewrites over the snapshot
-  * (no shuffle), the per-level traversal joins broadcast the frontier under
-  * AQE, and nothing collects to the driver. At 100 TB the delegation
+  * (no shuffle). The chain count picks its plan from the snapshot's size:
+  * up to [[graft.graph.Closure.DriverPreferredMaxEdges]] edges it collects
+  * them once and walks from the root on the driver; past that gate the
+  * per-level [[graft.graph.Traverse.expand]] joins broadcast the frontier
+  * under AQE and nothing collects to the driver. At 100 TB the delegation
   * snapshot would live as a bucketed table keyed on `hq_id`; the step
   * rewrites stay map-side.
   */
@@ -101,18 +104,38 @@ object DynamicReplay {
 
   /** The reference bench query: depth-bounded recursive chain count from a
     * root (common/bench_utils.py:9-34). One row, `n` = reachable drones
-    * within `depth` hops.
+    * within `depth` hops — bag semantics, `count(*)` over the walks of
+    * [[Traverse.expand]].
+    *
+    * Two tiers, gated on the snapshot's size:
+    *   - up to `maxEdges` edges: one `limit(maxEdges + 1)` collect, which
+    *     is also the size probe, then [[Closure.walkCountFrom]]'s BFS from
+    *     the root on the driver; the answer is a one-row local frame;
+    *   - past it: the [[Traverse.expand]] walk, one Spark job or more per
+    *     level, over the same edges.
+    * Both return the same `n bigint not null` row. `maxEdges = 0` forces
+    * the walk over any non-empty snapshot, a negative cap over every one.
     */
   def chainCount(spark: SparkSession, delegation: DataFrame, depth: Int,
-      root: String = "HQ"): DataFrame = {
+      root: String = "HQ",
+      maxEdges: Long = Closure.DriverPreferredMaxEdges): DataFrame =
+    rootedCount(spark, edges(delegation), depth, root, maxEdges)
+
+  /** [[chainCount]] over a (parent, child) edge view. */
+  private def rootedCount(spark: SparkSession, e: DataFrame, depth: Int,
+      root: String, maxEdges: Long): DataFrame = {
     import spark.implicits._
-    // expectTinyFrontier: the delegation forest has bounded fanout (every
-    // frontier is at most the modular-family size), so the walk skips the
-    // per-level caches — recompute of tiny joins is cheaper (measured
-    // ~20% of a rewire replay cycle).
-    Traverse.expand(Seq(root).toDF("node"), edges(delegation),
-        maxDepth = depth, expectTinyFrontier = true)
-      .agg(count(lit(1)).as("n"))
+    Closure.walkCountFrom(e, root, depth, maxEdges = maxEdges) match {
+      case Some(n) => Seq(n).toDF("n")
+      // expectTinyFrontier: the delegation forest has bounded fanout
+      // (every frontier is at most the modular-family size), so the walk
+      // skips the per-level caches — recompute of tiny joins is cheaper
+      // (measured ~20% of a rewire replay cycle).
+      case None =>
+        Traverse.expand(Seq(root).toDF("node"), e, maxDepth = depth,
+            expectTinyFrontier = true)
+          .agg(count(lit(1)).as("n"))
+    }
   }
 
   /** Scenario 1 (turn-taking): T mutation steps, each followed by the chain
@@ -165,7 +188,6 @@ object DynamicReplay {
   def rewireReplay(spark: SparkSession, sfDir: String,
       depths: Seq[Int] = DefaultDepths, modulo: Int = DefaultModulo,
       fanout: Int = DefaultFanout): DataFrame = {
-    import spark.implicits._
     var e = edges(baseDelegation(spark, sfDir, fanout))
     val rows = depths.zipWithIndex.map { case (depth, i) =>
       val step = i + 1
@@ -174,9 +196,7 @@ object DynamicReplay {
         .select(col("c_custkey").cast("string").as("child"))
       val newEdges = batch.select(lit("HQ").as("parent"), col("child"))
       e = settle(Snapshot.rewire(e, batch, newEdges))
-      Traverse.expand(Seq("HQ").toDF("node"), e, maxDepth = depth,
-          expectTinyFrontier = true) // bounded-fanout forest, see chainCount
-        .agg(count(lit(1)).as("n"))
+      rootedCount(spark, e, depth, "HQ", Closure.DriverPreferredMaxEdges)
         .select(lit(step).as("step"), lit(depth).as("depth"), col("n"))
     }
     rows.reduce(_ unionByName _).orderBy(col("step"))

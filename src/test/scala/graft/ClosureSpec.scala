@@ -111,6 +111,22 @@ class ClosureSpec extends AnyFunSuite {
       maxDistributedEdges = 2L).isEmpty)
   }
 
+  test("a null node ends a walk and never bridges two") {
+    // Traverse.expand joins on parent = node and a null key never joins:
+    // a→null is a walk of length 1, and null→b extends no walk.
+    val e = Seq[(String, String)](("a", null), (null, "b"), ("b", "c"))
+      .toDF("parent", "child")
+    val walked = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 3)
+      .as[(String, Int)].collect().toSeq
+    CacheRegistry.releaseAll()
+    assert(walked == Seq((null, 1)))
+    val rows = Closure.closureSmall(e, maxDepth = 3)
+      .as[(String, String, Int, Long)].collect().toSet
+    assert(rows == Set(("a", null, 1, 1L), ("b", "c", 1, 1L)))
+    assert(Closure.closureIndex(e, maxDepth = 3).pathCount("a", "b", 3) == 0L)
+    assert(Closure.walkCountFrom(e, "a", 3) == Some(1L))
+  }
+
   test("closureSmall fails loudly on path-multiplicity overflow") {
     // A small complete digraph under the edge cap grows bag counts as
     // ~(n-1)^lvl: 20 nodes, depth 20 → 19^20 ≈ 4e25 >> Long.MaxValue.

@@ -2,7 +2,6 @@ package graft
 
 import graft.graph.{Closure, GraphData}
 import graft.queries.{GraphQueries, Prepared}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins for the prepared-statement surface: every arm — the driver-tier
@@ -28,36 +27,7 @@ class PreparedSpec extends AnyFunSuite {
     Prepared.overClosure(spark, Closure.closureAuto(
         GraphData.trustChain(spark, dir), 20, maxEdges = 0L).get, 20)
 
-  /** Jobs `body` starts: counted by job group, closed by a sentinel job
-    * in the same group (the listener bus delivers in order, so once the
-    * sentinel is seen every job before it has been counted). */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"prepared-spec-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
-          if (e.properties.getProperty("spark.job.description") == "sentinel")
-            done.countDown()
-          else jobs.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsIn(body: => Unit): Int = JobWatch(spark)(body).jobs
 
   test("closure-backed bind matches the recursive-CTE twin per binding") {
     val pq = Prepared.wotPathCount(spark, sf)

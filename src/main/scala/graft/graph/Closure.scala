@@ -1,24 +1,33 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Bounded transitive closure of a SMALL graph, with bag-semantics path
-  * multiplicities — the broadcast-dimension side of reachability joins.
+  * multiplicities — the dimension side of reachability decisions.
   *
   * The ABAC/WoT decision shape at scale is "huge fact side (users,
   * events) × small hierarchy (groups, org units)": the hierarchy is a
   * dimension table, so the scalable plan is to materialize its ≤d-hop
-  * closure once and broadcast-join it, not to iterate a frontier walk
+  * closure once and probe or join it, not to iterate a frontier walk
   * whose every level is a Spark job. A 1000-executor cluster burns more
   * wall-clock scheduling 50 tiny jobs than scanning 10^9 users against a
   * broadcast map.
   *
-  * `closureSmall` collects the edge list to the driver under an explicit
-  * cap — the same bounded-driver-read contract as the IVF centroid
-  * ranking (Similarity.ivfTopK). Callers auto-pick: closure when the
-  * hierarchy fits the cap, [[Traverse.expand]] when it does not
-  * (GraphQueries.r4AbacDecision).
+  * Three tiers, picked from the measured edge count by [[pathCountsAuto]]
+  * (point probes) or [[closureAuto]] (a closure frame):
+  *   - driver: one bounded collect and a BFS on the driver — the
+  *     [[PathIndex]] that GraphQueries.r3WotPathCount, the ABAC decision
+  *     (GraphQueries.abacDecision, with [[walksInto]]) and
+  *     Prepared.wotPathCount probe without a Spark job, or the
+  *     [[closureSmall]] frame;
+  *   - distributed: the [[closureDistributed]] frame, which callers filter
+  *     or broadcast-join;
+  *   - None: the graph is a fact table, and the caller walks with
+  *     [[Traverse.expand]].
+  * Edge lists are collected under an explicit cap, the same
+  * bounded-driver-read contract as the IVF centroid ranking
+  * (Similarity.ivfTopK).
   *
   * Reference semantics: path COUNTS, not reachability — a diamond
   * contributes 2 (matches Traverse.expand's bag UNION ALL; reference
@@ -47,17 +56,22 @@ object Closure {
     * boundary was set from DataFrame point probes over the cached closure
     * (15k-edge sf0.1 trust chain: warm 97 ms over the distributed
     * artifact vs 366 ms over the driver-built one), a cost driver-tier
-    * point probes no longer pay. It stays for the relational consumers
-    * that still read the frame (r3, r4) and for the build: the BFS is
+    * point probes no longer pay. It stays for the build: the BFS is
     * single-threaded (4.2 s vs the distributed 5.6 s at 15k edges, a gap
     * that inverts with size) and its closure lives on the driver heap.
     * The 100k hard driver cap stays as the memory-safety bound for
     * explicit closureSmall/closureIndex callers.
     *
-    * It is also the default gate of [[walkCountFrom]], the rooted chain
-    * count of the dynamic-topology replay (DynamicReplay.chainCount):
-    * below it one bounded collect and a BFS from the root replace the
-    * per-level jobs of a [[Traverse.expand]] walk.
+    * Its consumers:
+    *   - Prepared.wotPathCount and GraphQueries.r3WotPathCount probe the
+    *     trust chain's index below it;
+    *   - GraphQueries.abacDecision (r4) probes the subgroup index below
+    *     it, and also caps its driver reads with it: the permission bag
+    *     ([[walksInto]]) and the filtered membership;
+    *   - [[walkCountFrom]], the rooted chain count of the dynamic-topology
+    *     replay (DynamicReplay.chainCount), defaults to it: below it one
+    *     bounded collect and a BFS from the root replace the per-level
+    *     jobs of a [[Traverse.expand]] walk.
     */
   val DriverPreferredMaxEdges = 10000L
 
@@ -92,8 +106,11 @@ object Closure {
   // The driver tier's point-lookup indexes, under the same keys.
   private val indexCache =
     new java.util.concurrent.ConcurrentHashMap[String, PathIndex]()
+  // walksInto's per-node counts, under the edges' key plus the targets'.
+  private val intoCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[Map[String, Long]]]()
 
-  /** Memo insert shared by both caches. Bounded like the other artifact
+  /** Memo insert shared by the caches. Bounded like the other artifact
     * memos: evicting wholesale past 32 entries, releasing each (the
     * cached closures are unpersisted so the block store doesn't
     * accumulate dead columnar batches in a resident service replaying
@@ -196,6 +213,35 @@ object Closure {
           edges, maxDepth, parentCol, childCol, maxEdges, maxDistributedEdges))
         .map(Right(_))
     }
+  }
+
+  /** Walks into a target bag, per node, on the driver tier: for every
+    * node g of `index` — the driver-tier closure of the (parent, child)
+    * `edges` that [[pathCountsAuto]] returned for `maxDepth` — the sum
+    * over the rows t of `targets(targetCol)` (duplicates count) of the
+    * walks g→t of length 1..maxDepth, plus one when g == t. This is
+    * `sum(n_paths)` of the closure joined to the targets on dst, with the
+    * zero-length walk added: the ABAC group → grant count. Only positive
+    * counts get an entry, and a null id matches nothing.
+    *
+    * Memoized per (edges, targets) content key, so a warm call reads no
+    * table and overwriting either input mints a fresh key. None when the
+    * targets hold more than [[DriverPreferredMaxEdges]] rows: the caller
+    * must join the closure frame instead.
+    */
+  def walksInto(edges: DataFrame, index: PathIndex, maxDepth: Int,
+      targets: DataFrame, targetCol: String): Option[Map[String, Long]] = {
+    def build = collectUnder(targets.select(targetCol), DriverPreferredMaxEdges)
+      .map { rows =>
+        val bag = rows.flatMap(r => Option(r.getString(0)))
+          .groupMapReduce(identity)(_ => 1L)(_ + _)
+        index.walksInto(bag, maxDepth)
+      }
+    val key = for {
+      e <- graft.PlanKeys.planKey(edges)
+      t <- graft.PlanKeys.planKey(targets)
+    } yield s"$e:$maxDepth|$t:$targetCol"
+    key.fold(build)(k => remember(intoCache, k, build)(_ => ()))
   }
 
   /** Distributed bounded bag closure via prefix-decomposition doubling —
@@ -319,7 +365,7 @@ object Closure {
       parentCol: String = "parent", childCol: String = "child",
       maxEdges: Long = DriverPreferredMaxEdges): Option[Long] = {
     require(maxDepth >= 1, s"maxDepth must be >= 1, got $maxDepth")
-    collectUnder(edges, parentCol, childCol, maxEdges).map { es =>
+    edgesUnder(edges, parentCol, childCol, maxEdges).map { es =>
       var n = 0L
       walksFrom(adjacency(es), root, maxDepth) { (_, lvl, cnt) =>
         n = try Math.addExact(n, cnt)
@@ -333,15 +379,20 @@ object Closure {
     }
   }
 
-  /** The (parent, child) edge list on the driver, or None past `maxEdges`:
-    * one `limit(maxEdges + 1)` collect, so the read is its own size probe.
+  /** The rows of `df` on the driver, or None past `maxRows`: one
+    * `limit(maxRows + 1)` collect, so the read is its own size probe.
     */
-  private def collectUnder(edges: DataFrame, parentCol: String,
-      childCol: String, maxEdges: Long): Option[Array[(String, String)]] = {
-    val es = edges.select(parentCol, childCol).limit(probeLimit(maxEdges))
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    if (es.length <= maxEdges) Some(es) else None
+  private[graft] def collectUnder(df: DataFrame,
+      maxRows: Long): Option[Array[Row]] = {
+    val rows = df.limit(probeLimit(maxRows)).collect()
+    if (rows.length <= maxRows) Some(rows) else None
   }
+
+  /** The (parent, child) edge list on the driver, or None past `maxEdges`. */
+  private def edgesUnder(edges: DataFrame, parentCol: String,
+      childCol: String, maxEdges: Long): Option[Array[(String, String)]] =
+    collectUnder(edges.select(parentCol, childCol), maxEdges)
+      .map(_.map(r => (r.getString(0), r.getString(1))))
 
   /** Children by parent, duplicates kept (each is one more walk). A null
     * parent is left out: no equality join matches it, so no walk expands
@@ -386,7 +437,7 @@ object Closure {
     */
   private def driverWalks(edges: DataFrame, maxDepth: Int, parentCol: String,
       childCol: String, maxEdges: Long): Array[(String, String, Int, Long)] = {
-    val collected = collectUnder(edges, parentCol, childCol, maxEdges)
+    val collected = edgesUnder(edges, parentCol, childCol, maxEdges)
     require(collected.isDefined,
       s"closureSmall: graph exceeds $maxEdges edges — use Traverse.expand")
     val es = collected.get
@@ -426,6 +477,39 @@ object Closure {
           }
           if (lo > from && dsts(lo - 1) == dst) running(lo - 1) else 0L
       }
+
+    /** For every src, Σ over `targets` (t → k, its multiplicity) of
+      * k × ([[pathCount]](src, t, maxLvl), plus one when src == t); only
+      * positive sums get an entry. One pass over the rows, checked like
+      * the build: a sum past Long range fails rather than wrap.
+      */
+    def walksInto(targets: Map[String, Long], maxLvl: Long): Map[String, Long] = {
+      val out = scala.collection.mutable.HashMap[String, Long]()
+      def add(src: String, n: => Long): Unit =
+        out(src) = try Math.addExact(out.getOrElse(src, 0L), n)
+          catch { case _: ArithmeticException =>
+            throw new ArithmeticException(
+              s"walksInto: walk count overflow from $src — graph too dense " +
+                "for a bag count")
+          }
+      targets.foreach { case (t, k) => add(t, k) }
+      spans.foreach { case (src, (from, until)) =>
+        var i = from
+        while (i < until) {
+          // Rows of one dst are contiguous and sorted by lvl: the last
+          // one within maxLvl holds the running sum.
+          val dst = dsts(i)
+          var within = 0L
+          while (i < until && dsts(i) == dst) {
+            if (lvls(i) <= maxLvl) within = running(i)
+            i += 1
+          }
+          if (within > 0)
+            targets.get(dst).foreach(k => add(src, Math.multiplyExact(within, k)))
+        }
+      }
+      out.toMap
+    }
   }
 
   object PathIndex {

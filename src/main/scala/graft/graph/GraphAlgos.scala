@@ -202,13 +202,11 @@ object GraphAlgos {
       // deferred to the caller's single action), so the 2·iterations
       // eager job barriers are gone while max + normalize stay two
       // cheap reads of one cached 15-20k-row frame per round.
-      explainRound("hits auth-from-hub", i,
-        e.join(bcIf(bcVec)(hub), e("src") === hub("node"))
-          .groupBy(col("dst").as("anode")).agg(sum(col("h")).as("ar")))
+      val fromHub = e.join(bcIf(bcVec)(hub), e("src") === hub("node"))
+        .groupBy(col("dst").as("anode")).agg(sum(col("h")).as("ar"))
+      explainRound("hits auth-from-hub", i, fromHub)
       val aRaw = graft.CacheRegistry.register(
-        e.join(bcIf(bcVec)(hub), e("src") === hub("node"))
-          .groupBy(col("dst").as("anode")).agg(sum(col("h")).as("ar"))
-          .localCheckpoint(eager = false))
+        fromHub.localCheckpoint(eager = false))
       val aMax = aRaw.agg(max(col("ar")).as("am"))
       auth = aRaw.crossJoin(broadcast(aMax))
         .select(col("anode").as("node"), (col("ar") / col("am")).as("a"))

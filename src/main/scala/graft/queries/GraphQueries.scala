@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.graph.{GraphData, Traverse}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.graph.{Closure, GraphData, Traverse}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Recursion / variable-length traversal family (SURVEY.md §2.3 J7-J11 and
@@ -144,17 +144,16 @@ object GraphQueries {
     */
   def r3WotPathCount(spark: SparkSession, d: String): DataFrame = {
     val chain = GraphData.trustChain(spark, d)
-    // Same shape decision as r4: a 20-level walk over a dimension-sized
-    // trust graph pays ~90 tiny scheduler jobs per run (TravProf), the
-    // wrong physical plan at ANY scale. closureAuto picks by size:
-    // driver BFS closure under 100k edges, the log2(d)-round distributed
-    // closure (Closure.closureDistributed) up to 10M edges — both
-    // memoized across runs, so the path count is a filter + sum over a
-    // cached artifact. Only past 10M edges (a trust graph that is a fact
-    // table, not a dimension) does the per-query frontier walk below
-    // stay the plan.
-    graft.graph.Closure.closureAuto(chain, maxDepth = 20) match {
-      case Some(closure) =>
+    // The trust graph is a dimension: pathCountsAuto picks its closure
+    // tier by size, memoized across runs. Below the driver gate the count
+    // is one PathIndex lookup returned as a local row (no Spark job, the
+    // prepared binds' form); up to 10M edges it is a filter + sum over
+    // the cached distributed closure. Only past that (a trust graph that
+    // is a fact table) does the per-query frontier walk stay the plan.
+    Closure.pathCountsAuto(chain, maxDepth = 20) match {
+      case Some(Left(index)) =>
+        Prepared.nPathsRow(spark, index.pathCount("E0", "E15", 20))
+      case Some(Right(closure)) =>
         closure.filter(col("src") === "E0" && col("dst") === "E15")
           .agg(coalesce(sum(col("n_paths")), lit(0L)).as("n_paths"))
       case None =>
@@ -219,44 +218,100 @@ object GraphQueries {
     * Users whose group chain cannot reach the permission-holding top group
     * within the bound produce no row (decision = deny).
     */
-  def r4AbacDecision(spark: SparkSession, d: String): DataFrame = {
-    val member = GraphData.abacMember(spark, d)
-      .filter(col("user_id").isin("C0", "C7", "C13", "C42"))
-      .select(col("user_id"), col("group_id").as("node"))
-    val subgroup = GraphData.abacSubgroup(spark, d)
-    val perm = GraphData.abacPermission(spark, d)
-      .filter(col("resource_id") === "RES0")
-    // The group hierarchy is a DIMENSION (25 nodes here; small by nature):
-    // the scalable ABAC plan is closure-then-broadcast — one precomputed
-    // ≤10-hop closure with bag multiplicities, one broadcast join over the
-    // (at 100 TB, huge) membership side, one aggregation. The iterative
-    // frontier walk (kept as the over-cap fallback) pays ~50 tiny
-    // scheduler jobs for the same answer — measured 4x slower at sf0.1
-    // (TravProf: 52 jobs/iter, p50 1.3-1.7 s vs ~0.35 s closure).
-    graft.graph.Closure.closureAuto(subgroup, maxDepth = 10) match {
-      case Some(closure) =>
-        // The whole permission map folds into ONE broadcast: walked
-        // reach (closure ⋈ perm on dst) plus lvl-0 self-reach (a perm
-        // row grants the group itself, path count 1). The big membership
-        // side is then scanned ONCE through a single broadcast join —
-        // the union-of-two-branches formulation scanned it twice.
-        // sum(n_paths) ≡ count(*) over the expanded bag walk.
-        val walked = closure.join(perm, closure("dst") === perm("group_id"))
-          .select(col("src"), col("n_paths"))
-        val self = perm.select(col("group_id").as("src"),
-          lit(1L).as("n_paths"))
-        member.join(broadcast(walked.unionByName(self)),
-            member("node") === col("src"))
-          .groupBy(col("user_id")).agg(sum(col("n_paths")).as("n"))
-          .orderBy(col("user_id"))
+  def r4AbacDecision(spark: SparkSession, d: String): DataFrame =
+    abacDecision(
+      GraphData.abacMember(spark, d)
+        .filter(col("user_id").isin("C0", "C7", "C13", "C42")),
+      GraphData.abacSubgroup(spark, d),
+      GraphData.abacPermission(spark, d).filter(col("resource_id") === "RES0"),
+      maxDepth = 10)
+
+  /** The ABAC decision over any membership (user_id, group_id), subgroup
+    * hierarchy (parent, child) and permission rows (group_id): per user,
+    * the walks of length 0..maxDepth from one of its groups to a
+    * permission row's group, summed as a bag — (user_id, n) sorted by
+    * user_id, no row for a user with none. A null id matches nothing.
+    *
+    * The hierarchy is a dimension (25 groups in r4), so the plan comes
+    * from its measured size — one [[graft.graph.Closure.pathCountsAuto]]
+    * call picks the arm:
+    *   - driver tier (under `maxEdges` and DriverPreferredMaxEdges): the
+    *     group → grant-count map ([[graft.graph.Closure.walksInto]],
+    *     memoized per subgroup and permission content, so a warm decision
+    *     reads no permission table) answers the membership read once
+    *     under `maxMembers` rows, returned as a local frame; collecting
+    *     it starts no further job. Past `maxMembers` the membership scan
+    *     joins the map as a broadcast local relation; a permission bag
+    *     past the driver cap takes the closure frame's plan;
+    *   - distributed tier (under `maxDistributedEdges`): the closure frame
+    *     joined to the permission rows, with the lvl-0 self grant, as ONE
+    *     broadcast over a single scan of the membership side;
+    *   - else the [[Traverse.expand]] frontier walk, one job per level.
+    * Every arm returns the same schema and rows.
+    */
+  def abacDecision(member: DataFrame, subgroup: DataFrame, perm: DataFrame,
+      maxDepth: Int,
+      maxEdges: Long = Closure.DefaultMaxEdges,
+      maxDistributedEdges: Long = Closure.DefaultMaxDistributedEdges,
+      maxMembers: Long = Closure.DriverPreferredMaxEdges): DataFrame = {
+    val users = member.select(col("user_id"), col("group_id").as("node"))
+    // users ⋈ (group → grants), summed per user.
+    def joined(grants: DataFrame) =
+      users.join(broadcast(grants), users("node") === grants("src"))
+        .groupBy(col("user_id")).agg(sum(col("n_paths")).as("n"))
+        .orderBy(col("user_id"))
+    // Walked reach (closure ⋈ perm on dst) plus lvl-0 self-reach (a perm
+    // row grants the group itself, path count 1) fold into one broadcast.
+    // sum(n_paths) ≡ count(*) over the expanded bag walk.
+    def overClosure(closure: DataFrame) = joined(
+      closure.join(perm, closure("dst") === perm("group_id"))
+        .select(col("src"), col("n_paths"))
+        .unionByName(perm.select(col("group_id").as("src"), lit(1L).as("n_paths"))))
+    Closure.pathCountsAuto(subgroup, maxDepth, maxEdges = maxEdges,
+        maxDistributedEdges = maxDistributedEdges) match {
+      case Some(Left(index)) =>
+        Closure.walksInto(subgroup, index, maxDepth, perm, "group_id") match {
+          case Some(grants) =>
+            Closure.collectUnder(users, maxMembers) match {
+              case Some(rows) => grantedLocally(users, rows, grants)
+              case None =>
+                import member.sparkSession.implicits._
+                joined(grants.toSeq.toDF("src", "n_paths"))
+            }
+          case None => overClosure(Closure.closureAuto(subgroup, maxDepth,
+              maxEdges = maxEdges, maxDistributedEdges = maxDistributedEdges).get)
+        }
+      case Some(Right(closure)) => overClosure(closure)
       case None =>
-        val reach = member.withColumn("lvl", lit(0))
-          .union(Traverse.expand(member, subgroup, maxDepth = 10,
+        val reach = users.withColumn("lvl", lit(0))
+          .union(Traverse.expand(users, subgroup, maxDepth = maxDepth,
             expectTinyFrontier = true))
+        // sum, not count: the closure arms' nullable `n`.
         reach.join(perm, reach("node") === perm("group_id"))
-          .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
+          .groupBy(col("user_id")).agg(sum(lit(1L)).as("n"))
           .orderBy(col("user_id"))
     }
+  }
+
+  /** [[abacDecision]]'s driver-local answer: the collected (user_id, node)
+    * rows summed against the grant map, as a local frame sorted as
+    * `orderBy(user_id)` sorts — nulls first, then by UTF-8 bytes.
+    */
+  private def grantedLocally(users: DataFrame,
+      rows: Array[Row], grants: Map[String, Long]): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val n = scala.collection.mutable.HashMap[Option[String], Long]()
+    rows.foreach { r =>
+      grants.get(r.getString(1)).foreach { k =>
+        val u = Option(r.getString(0))
+        n(u) = Math.addExact(n.getOrElse(u, 0L), k)
+      }
+    }
+    val byUser = Ordering.Option(Ordering.by[String, UTF8String](UTF8String.fromString))
+    val out = n.toSeq.sortBy(_._1)(byUser).map { case (u, k) => Row(u.orNull, k) }
+    users.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
+      StructType(Seq(users.schema("user_id"), StructField("n", LongType))))
   }
 
   /** R4 Cypher twin: the reference's Cypher formulation walks `MEMBER_OF*`

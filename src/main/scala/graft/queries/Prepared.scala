@@ -58,9 +58,7 @@ object Prepared {
       case Some(Left(index)) =>
         new PreparedQuery(args => {
           val (client, anchor, length) = wotArgs(args, maxDepth)
-          spark.createDataFrame(
-            java.util.List.of(Row(index.pathCount(client, anchor, length))),
-            NPathsSchema)
+          nPathsRow(spark, index.pathCount(client, anchor, length))
         })
       case Some(Right(closure)) => overClosure(spark, closure, maxDepth)
       case None => wotPathCountRcte(spark, sfDir)
@@ -69,6 +67,12 @@ object Prepared {
   /** The SQL arms' output schema: `n_paths bigint`, never null. */
   private val NPathsSchema =
     StructType(Seq(StructField("n_paths", LongType, nullable = false)))
+
+  /** A driver-tier path count as a one-row local frame in the SQL arms'
+    * schema: collecting it starts no Spark job.
+    */
+  private[graft] def nPathsRow(spark: SparkSession, n: Long): DataFrame =
+    spark.createDataFrame(java.util.List.of(Row(n)), NPathsSchema)
 
   /** The distributed tier's statement: a filter + sum over a closure frame
     * (src, dst, lvl, n_paths), registered under a view of its own.

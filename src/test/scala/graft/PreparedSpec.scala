@@ -106,6 +106,11 @@ class PreparedSpec extends AnyFunSuite {
     val schema = pq.bind(binding).schema
     assert(schema == dist.bind(binding).schema)
     assert(schema == Prepared.wotPathCountRcte(spark, sf).bind(binding).schema)
+    // r3 answers the same binding from the same index.
+    var r3: Array[org.apache.spark.sql.Row] = null
+    assert(jobsIn { r3 = GraphQueries.r3WotPathCount(spark, sf).collect() } == 0)
+    assert(r3.toSeq == rows.toSeq)
+    assert(GraphQueries.r3WotPathCountDist(spark, sf).schema == schema)
     // prepWotCount unions three binds by name.
     val got = GraphQueries.prepWotCount(spark, sf)
       .as[(String, String, Int, Long)].collect().toSeq

@@ -161,7 +161,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val itersRequested = sys.env.getOrElse("SPARK_GRAFT_ITERS", "20").toInt
     // ---- Wall-clock budget guard (r10 verdict #1): the driver's capture
     // ---- of the r10 run was killed at its wall-clock limit (rc 124) on a
@@ -182,27 +182,7 @@ object Bench {
     // block → reason, carried into the final line so a degraded run is
     // self-describing rather than silently thin.
     val skips = scala.collection.mutable.LinkedHashMap[String, String]()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE's coalescing target is BYTES (default minPartitionSize 1MB),
-      // which serializes CPU-dense-but-byte-small stages: a ≤1MB shuffle
-      // feeding per-row crypto/levenshtein/regex or an exploding Generate
-      // collapses to ONE task and runs single-core (r15, measured: d27's
-      // two 5 s one-task stages, m8 −46%, d25/d26/g8 −22%, j5/r1 −20%
-      // hot p50 after the change). 64KB keeps coalescing for truly tiny
-      // shuffles while letting parallelismFirst honor the session's
-      // core count; at cluster scale partitions exceed 1MB anyway, so
-      // the setting is a no-op there. Env-overridable for bigger-cluster
-      // tuning.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_AQE_MIN_PARTITION", "64KB"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(cpus)
 
     // Filtered runs (SPARK_GRAFT_ONLY / SPARK_GRAFT_BLOCKS — dev/forensic
     // protocol) must never overwrite the official full-run evidence: a
@@ -295,7 +275,7 @@ object Bench {
     // ---- order flips to essentials-first (see below).
     def probeOnce(): Double = {
       val t = System.nanoTime()
-      spark.range(0, 40000000L, 1, cpus.toInt)
+      spark.range(0, 40000000L, 1, cpus)
         .selectExpr("sum(id * 3 + 1)").head()
       (System.nanoTime() - t) / 1e6
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Plan-inspection main: prints the formatted physical plan of selected
   * catalog queries (default: the scan/join/agg shapes worth auditing for
   * pushdown, broadcast, and codegen coverage).
@@ -10,10 +9,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("s1_scan_filter", "q1_agg", "j5_three_way_join", "j8_hier_vc_count",
         "m8_cdc_apply", "d5_embed_cosine", "ann_topk")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(8)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

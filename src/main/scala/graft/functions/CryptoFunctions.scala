@@ -79,11 +79,11 @@ object CryptoFunctions {
   }
 
   // Ed25519 fast path: SunEC's pure-Java Ed25519 measures ~715 µs/sign and
-  // ~705 µs/verify on this JVM (graft.tools.VcProf), which makes it >90% of
-  // the U1/U2 row cost. Tink (shipped in Spark's own jar dir) runs the same
-  // RFC 8032 math at ~170/215 µs — and Ed25519 is deterministic, so the
-  // signatures are BIT-IDENTICAL (asserted in VcProf and CryptoSpec); the
-  // swap is invisible to every oracle. Keys still travel as DER; the JDK17
+  // ~705 µs/verify on JDK 17 (PLANS.md "Ed25519 via Tink"), which makes
+  // it >90% of the U1/U2 row cost. Tink (shipped in Spark's own jar dir)
+  // runs the same RFC 8032 math at ~170/215 µs — and Ed25519 is
+  // deterministic, so the signatures are BIT-IDENTICAL (asserted in
+  // CryptoSpec); the swap is invisible to every oracle. Keys still travel as DER; the JDK17
   // encodings are fixed-shape (PKCS#8 = 16-byte header + 32-byte seed,
   // X.509 = 12-byte header + 32-byte key), and anything else falls back to
   // the JDK provider.

@@ -36,8 +36,9 @@ object DidVc {
         "mission_id" -> JStr(missionId),
         "drone_id" -> JStr(droneId)))))
 
-  // String.format-per-byte costs ~100 µs for a 64-byte signature (VcProf);
-  // a digit table does the same encode in well under a microsecond.
+  // String.format-per-byte costs ~100 µs for a 64-byte signature (PLANS.md
+  // "Ed25519 via Tink"); a digit table does the same encode in well under
+  // a microsecond.
   private val HexDigits = "0123456789abcdef".toCharArray
   private def hex(b: Array[Byte]): String = {
     val out = new Array[Char](b.length * 2)

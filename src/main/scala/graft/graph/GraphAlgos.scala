@@ -549,7 +549,9 @@ object GraphAlgos {
   private final case class ForestFrames(
       e: DataFrame,         // (parent, child) distinct, checkpointed
       nInternal: Long,      // number of distinct parents
-      small: Boolean,       // internal-node vectors fit the broadcast gate
+      // Broadcast hint for an internal-node frame whose non-key columns
+      // take the given bytes per row: on while it fits the byte gate.
+      bc: Long => DataFrame => DataFrame,
       parents: DataFrame,   // (node) the internal nodes, checkpointed
       leafEdges: DataFrame, // e rows whose child is a leaf
       eInt: DataFrame,      // e rows whose child is internal
@@ -612,13 +614,13 @@ object GraphAlgos {
     // Forest guard in ONE pass (was two count actions): every child has
     // exactly one DISTINCT parent <=> rows == distinct children. The
     // same pass measures the max node-id length for the byte-derived
-    // broadcast gate and the internal-node count (r15 — the separate
-    // parents.count() action is gone).
+    // broadcast gate (UTF-8 bytes, not characters) and the internal-node
+    // count (r15 — the separate parents.count() action is gone).
     val g = e.agg(count(lit(1)).as("ne"),
       count_distinct(col("child")).as("nch"),
       count_distinct(col("parent")).as("npar"),
-      greatest(max(length(col("parent").cast("string"))),
-        max(length(col("child").cast("string")))).as("klen")).head()
+      greatest(max(octet_length(col("parent").cast("string"))),
+        max(octet_length(col("child").cast("string")))).as("klen")).head()
     require(g.getLong(0) == g.getLong(1),
       s"$who input is not a forest: some child has > 1 parent")
     val keyLen = if (g.isNullAt(3)) 0L else g.getInt(3).toLong
@@ -627,12 +629,16 @@ object GraphAlgos {
     val parents = graft.CacheRegistry.register(
       e.select(col("parent").as("node")).distinct().localCheckpoint())
     val nInternal = g.getLong(2)
-    val small = fitsBroadcast(nInternal, keyLen, 16)
+    // Every gated frame below holds at most one row per internal node;
+    // each is charged its own value columns: 8 bytes per long or int
+    // slot, plus the id bytes for a string value.
+    val bc = (valueBytes: Long) =>
+      bcIf(fitsBroadcast(nInternal, keyLen, valueBytes)) _
     // Split the edge set by the child's side in one flagging join — the
     // parents set broadcasts under the measured threshold, so the bulk
     // edge set is never exchanged for the split.
     val flagged = graft.CacheRegistry.register(
-      e.join(bcIf(small)(
+      e.join(bc(8L)(
           parents.select(col("node").as("child"), lit(1).as("is_int"))),
           Seq("child"), "left")
         .select(col("parent"), col("child"), col("is_int").isNotNull
@@ -650,7 +656,9 @@ object GraphAlgos {
     //   P_1 = eInt reversed; P_k = P_{k−1} extended one hop up.
     // Internal depths are ≤ maxDepth−1 for any guard-passing forest
     // (the deepest node is a leaf), so maxDepth−2 extension rounds
-    // cover every chain. Lazy loop (linear lineage, only the layer
+    // cover every chain; at maxDepth = 1 no internal node may have a
+    // parent, so P_1 is empty and the coverage guard below fires on any
+    // deeper forest. Lazy loop (linear lineage, only the layer
     // truncates — the union is a linear chain over truncated layers);
     // |anc| = Σ_v depth(v) ≤ |internal|·(maxDepth−1), the same
     // O(V·depth) volume the former per-round sweeps shuffled in
@@ -660,13 +668,13 @@ object GraphAlgos {
     // broadcast-build driver round-trips, the measured local-mode cost)
     // with the closed-form aggregates below and in treeDistanceSums
     // (r15, guide §1.2).
-    var layer = eInt.select(col("child").as("desc"),
+    var layer = eInt.where(lit(maxDepth >= 2)).select(col("child").as("desc"),
       col("parent").as("anc")).localCheckpoint(eager = false)
     graft.CacheRegistry.register(layer)
     var anc = layer
     (1 to maxDepth - 2).foreach { _ =>
       val up = graft.CacheRegistry.register(layer
-        .join(bcIf(small)(eInt.select(col("child").as("anc"),
+        .join(bc(8L + keyLen)(eInt.select(col("child").as("anc"),
           col("parent").as("up"))), "anc")
         .select(col("desc"), col("up").as("anc"))
         .localCheckpoint(eager = false))
@@ -686,9 +694,9 @@ object GraphAlgos {
     val comp = graft.CacheRegistry.register(
       roots.select(col("node"), col("node").as("root"), lit(0L).as("depth"))
         .unionByName(
-          anc.join(bcIf(small)(roots.select(col("node").as("anc"))), "anc")
+          anc.join(bc(0L)(roots.select(col("node").as("anc"))), "anc")
             .select(col("desc").as("node"), col("anc").as("root"))
-            .join(bcIf(small)(depths), "node")
+            .join(bc(8L)(depths), "node")
             .select(col("node"), col("root"), col("depth")))
         .localCheckpoint(eager = false)) // the guard count materializes
     require(comp.count() == nInternal,
@@ -700,14 +708,14 @@ object GraphAlgos {
     // (internal descendants each bring themselves + their leaf children;
     // v brings itself + its own leaf children).
     val descAgg = anc
-      .join(bcIf(small)(leafCnt.withColumnRenamed("node", "desc")),
+      .join(bc(8L)(leafCnt.withColumnRenamed("node", "desc")),
         Seq("desc"), "left")
       .groupBy(col("anc").as("node"))
       .agg((count(lit(1)) + sum(coalesce(col("lc"), lit(0L)))).as("dsum"))
     val sizeInt = graft.CacheRegistry.register(
       parents
-        .join(bcIf(small)(leafCnt), Seq("node"), "left")
-        .join(bcIf(small)(descAgg), Seq("node"), "left")
+        .join(bc(8L)(leafCnt), Seq("node"), "left")
+        .join(bc(8L)(descAgg), Seq("node"), "left")
         .select(col("node"), (lit(1L) + coalesce(col("lc"), lit(0L)) +
           coalesce(col("dsum"), lit(0L))).as("size"))
         .localCheckpoint())
@@ -717,14 +725,14 @@ object GraphAlgos {
     // internal node contributes its depth plus depth+1 for each of its
     // leaf children.
     val rootStats = comp
-      .join(bcIf(small)(leafCnt), Seq("node"), "left")
+      .join(bc(8L)(leafCnt), Seq("node"), "left")
       .groupBy(col("root"))
       .agg(sum(col("depth") + coalesce(col("lc"), lit(0L)) *
         (col("depth") + lit(1L))).as("td"))
-      .join(bcIf(small)(sizeInt.select(col("node").as("root"),
+      .join(bc(8L)(sizeInt.select(col("node").as("root"),
         col("size").as("nc"))), "root")
-    val compInt = comp.join(bcIf(small)(rootStats), "root")
-    ForestFrames(e, nInternal, small, parents, leafEdges, eInt, leafCnt,
+    val compInt = comp.join(bc(16L)(rootStats), "root") // (root, td, nc)
+    ForestFrames(e, nInternal, bc, parents, leafEdges, eInt, leafCnt,
       anc, sizeInt, compInt)
   }
 
@@ -737,17 +745,16 @@ object GraphAlgos {
       parentCol: String = "parent", childCol: String = "child"): DataFrame = {
     val f = forestFrames(edges, maxDepth, parentCol, childCol,
       "treeBetweenness")
-    val small = f.small
 
     // Per-parent sum of C(child_subtree, 2) — leaf children contribute
     // C(1,2) = 0, so only INTERNAL child edges enter the aggregate.
     val childSq = f.eInt
-      .join(bcIf(small)(f.sizeInt.withColumnRenamed("node", "child")),
+      .join(f.bc(8L)(f.sizeInt.withColumnRenamed("node", "child")),
         "child")
       .groupBy(col("parent")).agg(sum(c2(col("size"))).as("childsq"))
     val internal = f.sizeInt
-      .join(bcIf(small)(f.compInt.select(col("node"), col("nc"))), "node")
-      .join(bcIf(small)(childSq.withColumnRenamed("parent", "node")),
+      .join(f.bc(8L)(f.compInt.select(col("node"), col("nc"))), "node")
+      .join(f.bc(8L)(childSq.withColumnRenamed("parent", "node")),
         Seq("node"), "left")
       .select(col("node"),
         (c2(col("nc") - lit(1L)) - coalesce(col("childsq"), lit(0L))
@@ -790,13 +797,12 @@ object GraphAlgos {
     //   S(v) = td + Nc·depth(v) + 2·Nc − 2·Σ_{a ∈ anc*(v)} size(a)
     // — pure integer arithmetic, identical values to the sweeps it
     // replaces (fuzz parity + the g13/g14 centrality identity pin it).
-    val small = f.small
     val ancSize = f.anc
-      .join(bcIf(small)(f.sizeInt.withColumnRenamed("node", "anc")), "anc")
+      .join(f.bc(8L)(f.sizeInt.withColumnRenamed("node", "anc")), "anc")
       .groupBy(col("desc").as("node")).agg(sum(col("size")).as("asum"))
     val internal = f.compInt
-      .join(bcIf(small)(f.sizeInt), "node")
-      .join(bcIf(small)(ancSize), Seq("node"), "left")
+      .join(f.bc(8L)(f.sizeInt), "node")
+      .join(f.bc(8L)(ancSize), Seq("node"), "left")
       .select(col("node"),
         (col("td") + col("nc") * col("depth") + lit(2L) * col("nc") -
           lit(2L) * (col("size") + coalesce(col("asum"), lit(0L))))
@@ -806,7 +812,7 @@ object GraphAlgos {
     // S(leaf) = S(parent) + Nc − 2 (size(leaf) = 1) — unchanged.
     val s = graft.CacheRegistry.register(internal.localCheckpoint())
     val leaves = f.leafEdges
-      .join(bcIf(small)(s.select(col("node").as("parent"),
+      .join(f.bc(16L)(s.select(col("node").as("parent"),
         col("dist_sum").as("sp"), col("nc"))), "parent")
       .select(col("child").as("node"),
         (col("sp") + col("nc") - lit(2L)).as("dist_sum"), col("nc"))

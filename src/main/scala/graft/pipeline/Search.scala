@@ -335,7 +335,8 @@ object Search {
     * one table scan — and, deliberately, NO array HOFs: the first cut
     * (filter over sequence(1, size−1) with element_at probes) allocated
     * an O(len) index array per row through an interpreted lambda and
-    * read 220 s at sf10 (superlinear — WaveProbe r14); this form is
+    * read 220 s at sf10 (superlinear — PLANS.md "Round-14 wave:
+    * five-decade probe"); this form is
     * three whole-stage-codegen string kernels. The text is canonicalized
     * to single spaces and space-padded, the phrase becomes the literal
     * `" w1 w2 "` found by instr (first occurrence, no regex), and the

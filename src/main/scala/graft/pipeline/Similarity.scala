@@ -1132,7 +1132,8 @@ object Similarity {
     * partitioned by `sem_cluster`, and the explicit isin-filter on the
     * batch's probed cluster ids prunes at the parquet-partition level —
     * batch-ingest cost is ∝ the probed clusters' mass, INDEPENDENT of
-    * corpus size (pinned by tools/IngestProbe across decades). Returns
+    * corpus size (measured across four decades, PLANS.md "Round-14:
+    * incremental-ingest scale probe"). Returns
     * (batch_doc, corpus_doc, sim).
     */
   def incrementalSemanticDedup(spark: SparkSession, path: String,

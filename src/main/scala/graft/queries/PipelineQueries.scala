@@ -701,7 +701,7 @@ object PipelineQueries {
   def annPqTopk(spark: SparkSession, d: String): DataFrame =
     Similarity.pqTopK(Tables.embeddings(spark, d), queryId = 0L, k = 10)
 
-  /** Measured PQ recall@10 (tools/PqProbe, r12): 0.8 at sf0.01, 0.7 at
+  /** Measured PQ recall@10 (PLANS.md, r12): 0.8 at sf0.01, 0.7 at
     * sf0.1, 1.0 at the generated sf1 — per-decade floors one band
     * (~0.1) under EACH decade's measured value (r12 verdict #4; the
     * single cross-decade floor 0.6 let a 1.0→0.65 sf1 regression pass
@@ -733,7 +733,7 @@ object PipelineQueries {
   def annIvfPqTopk(spark: SparkSession, d: String): DataFrame =
     Similarity.ivfPqTopK(Tables.embeddings(spark, d), queryId = 0L, k = 10)
 
-  /** Measured IVF-PQ recall@10 (tools/PqProbe, r12): 0.9 at sf0.01,
+  /** Measured IVF-PQ recall@10 (PLANS.md, r12): 0.9 at sf0.01,
     * 0.6 at sf0.1, 1.0 at the generated sf1 (sf0.001 reads 0.4 like
     * plain PQ — same distortion-dominated-corpus caveat, no gate runs
     * there). Per-decade floors one band under EACH measured value (r12
@@ -914,7 +914,7 @@ object PipelineQueries {
       .orderBy(col("batch_doc"), col("corpus_doc"))
   }
 
-  /** Measured d49 recall per decade (tools/D33Probe r13, k=8 p=3 over
+  /** Measured d49 recall per decade (PLANS.md, r13; k=8 p=3 over
     * the stored index): 1.0 (sf0.001), 1.0 (sf0.01), 0.9881 (sf0.1) —
     * the cluster-blocked batch×corpus probe loses only pairs sharing
     * none of their probed clusters, same loss mode as d33. Floors one

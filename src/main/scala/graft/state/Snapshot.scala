@@ -76,7 +76,8 @@ object Snapshot {
     * rows (nulls read as keep). One full-outer join on the keys — a single
     * hash shuffle of |target|+|source| rows (SortMergeJoin(FullOuter);
     * full-outer cannot broadcast, so one exchange per side is this
-    * operator's optimum — [[graft.tools.MergePlan]] is the audit). At
+    * operator's optimum — PLANS.md "third wave: full three-clause
+    * MERGE" records the executed-plan audit). At
     * 100 TB this is the MERGE plan itself, minus the file-level skipping a
     * table format layers on top; keys are assumed non-null on both sides
     * (enforce upstream), matching SQL MERGE's never-match-on-null.

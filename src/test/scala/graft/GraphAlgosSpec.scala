@@ -436,6 +436,9 @@ class GraphAlgosSpec extends AnyFunSuite {
     val star = (1 to 6).map(i => "hub" -> s"n$i")
     val got = treeBtw(star, 1)
     assert(got("hub") == 15L && (1 to 6).forall(i => got(s"n$i") == 0L))
+    // A height-1 forest fits maxDepth = 1 exactly.
+    val stars = Seq("h1" -> "a", "h1" -> "b", "h1" -> "c", "h2" -> "d")
+    assert(treeBtw(stars, 1) == bruteTreeBtw(stars))
   }
 
   test("tree betweenness: fuzz parity with pair enumeration on forests") {
@@ -495,6 +498,9 @@ class GraphAlgosSpec extends AnyFunSuite {
     val got = treeDist(star, 1)
     assert(got("hub")._1 == 6L)
     assert((1 to 6).forall(i => got(s"n$i")._1 == 11L)) // 1 + 2·5
+    val stars = Seq("h1" -> "a", "h1" -> "b", "h1" -> "c", "h2" -> "d")
+    assert(treeDist(stars, 1).view.mapValues(_._1).toMap ==
+      bruteTreeDist(stars))
   }
 
   test("tree distance sums: fuzz parity + the betweenness identity") {
@@ -531,5 +537,12 @@ class GraphAlgosSpec extends AnyFunSuite {
     val deep = Seq("a" -> "b", "b" -> "c", "c" -> "d")
     val e3 = intercept[IllegalArgumentException](treeBtw(deep, 1))
     assert(e3.getMessage.contains("no root"))
+    // Height 2 at maxDepth = 1: the ancestor-pair table must not seed
+    // the first hop, or b would find its root a and pass.
+    val h2 = Seq("a" -> "b", "b" -> "c")
+    val e4 = intercept[IllegalArgumentException](treeBtw(h2, 1))
+    assert(e4.getMessage.contains("no root"))
+    val e5 = intercept[IllegalArgumentException](treeDist(h2, 1))
+    assert(e5.getMessage.contains("no root"))
   }
 }

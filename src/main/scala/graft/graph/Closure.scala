@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Bounded transitive closure of a SMALL graph, with bag-semantics path
@@ -14,20 +14,20 @@ import org.apache.spark.sql.functions._
   * wall-clock scheduling 50 tiny jobs than scanning 10^9 users against a
   * broadcast map.
   *
-  * Three tiers, picked from the measured edge count by [[pathCountsAuto]]
-  * (point probes) or [[closureAuto]] (a closure frame):
-  *   - driver: one bounded collect and a BFS on the driver — the
-  *     [[PathIndex]] that GraphQueries.r3WotPathCount, the ABAC decision
-  *     (GraphQueries.abacDecision, with [[walksInto]]) and
-  *     Prepared.wotPathCount probe without a Spark job, or the
-  *     [[closureSmall]] frame;
+  * Two tiers plus the walk, picked from the measured edge count by
+  * [[pathCountsAuto]], the one entry point:
+  *   - driver: one bounded collect, which is also the size probe, and a
+  *     BFS on the driver build a [[PathIndex]]. GraphQueries.r3WotPathCount,
+  *     the ABAC decision (GraphQueries.abacDecision, with [[walksInto]])
+  *     and Prepared.wotPathCount probe it without a Spark job;
   *   - distributed: the [[closureDistributed]] frame, which callers filter
   *     or broadcast-join;
   *   - None: the graph is a fact table, and the caller walks with
   *     [[Traverse.expand]].
-  * Edge lists are collected under an explicit cap, the same
-  * bounded-driver-read contract as the IVF centroid ranking
-  * (Similarity.ivfTopK).
+  * [[walkCountFrom]] runs the driver tier's BFS from one root, for
+  * rooted counts that need no index. Edge lists are collected under an
+  * explicit cap, the same bounded-driver-read contract as the IVF
+  * centroid ranking (Similarity.ivfTopK).
   *
   * Reference semantics: path COUNTS, not reachability — a diamond
   * contributes 2 (matches Traverse.expand's bag UNION ALL; reference
@@ -36,11 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object Closure {
 
-  /** Max edges collected to the driver; above this callers must use the
-    * distributed closure or the frontier walk.
-    */
-  val DefaultMaxEdges = 100000L
-
   /** Edge bound for the distributed-closure middle regime: graphs too big
     * to collect but still dimension-shaped (the closure artifact stays
     * cluster-resident). Above this, callers fall back to the frontier
@@ -48,19 +43,12 @@ object Closure {
     */
   val DefaultMaxDistributedEdges = 10000000L
 
-  /** Preference boundary between the driver BFS and the distributed
-    * build inside [[closureAuto]] and [[pathCountsAuto]]. Below it the
-    * driver BFS builds in milliseconds and its artifact is small — the
-    * ABAC and WoT case: point probes are answered from its [[PathIndex]]
-    * with no Spark job, and joins read the small cached frame. The
-    * boundary was set from DataFrame point probes over the cached closure
-    * (15k-edge sf0.1 trust chain: warm 97 ms over the distributed
-    * artifact vs 366 ms over the driver-built one), a cost driver-tier
-    * point probes no longer pay. It stays for the build: the BFS is
+  /** Edge cap of the driver tier, and the default of every driver-tier
+    * cap. Below it the driver BFS builds in milliseconds and its
+    * [[PathIndex]] is small; point probes are answered from it with no
+    * Spark job. Past it the distributed build takes over: the BFS is
     * single-threaded (4.2 s vs the distributed 5.6 s at 15k edges, a gap
     * that inverts with size) and its closure lives on the driver heap.
-    * The 100k hard driver cap stays as the memory-safety bound for
-    * explicit closureSmall/closureIndex callers.
     *
     * Its consumers:
     *   - Prepared.wotPathCount and GraphQueries.r3WotPathCount probe the
@@ -88,160 +76,91 @@ object Closure {
   private def probeLimit(maxEdges: Long): Int =
     math.min(maxEdges, (Int.MaxValue - 1).toLong).toInt + 1
 
-  /** True iff `edges` is small enough for the closure path (one tiny
-    * count job — cheap next to the per-level jobs it avoids).
+  /** True iff `edges` holds at most `maxEdges` rows: one bounded count
+    * job, no row moved to the driver — the distributed tier's gate.
     */
-  def fitsDriver(edges: DataFrame, maxEdges: Long = DefaultMaxEdges): Boolean =
+  private def fitsUnder(edges: DataFrame, maxEdges: Long): Boolean =
     edges.limit(probeLimit(maxEdges)).count() <= maxEdges
 
   // Closures are index artifacts like the IVF centroids: computed once
   // per (hierarchy version, depth) and reused across decisions — at scale
   // they'd be persisted beside the hierarchy. Memoized only when the edge
   // plan has a nameable content identity (PlanKeys); a mutated snapshot
-  // mints a fresh key, a driver-local edge set recomputes. Each closure
-  // entry records whether the driver tier built it, so a later
-  // pathCountsAuto knows its tier without probing the size again.
-  private val closureCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, Boolean)]()
-  // The driver tier's point-lookup indexes, under the same keys.
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PathIndex]()
-  // walksInto's per-node counts, under the edges' key plus the targets'.
-  private val intoCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Map[String, Long]]]()
+  // mints a fresh key, a driver-local edge set recomputes. The value is
+  // the tier's artifact, so a hit skips the size probe too.
+  private val memo = new java.util.concurrent.ConcurrentHashMap[String,
+    Either[PathIndex, DataFrame]]()
 
-  /** Memo insert shared by the caches. Bounded like the other artifact
-    * memos: evicting wholesale past 32 entries, releasing each (the
-    * cached closures are unpersisted so the block store doesn't
-    * accumulate dead columnar batches in a resident service replaying
-    * many hierarchy versions).
-    */
-  private def remember[T](cache: java.util.concurrent.ConcurrentHashMap[String, T],
-      key: String, value: => T)(release: T => Unit): T = {
-    if (cache.size > 32) {
-      cache.values.forEach(v => try release(v) catch { case _: Exception => () })
-      cache.clear()
-    }
-    cache.computeIfAbsent(key, _ => value)
-  }
-
-  // Caps are part of the key: callers forcing a tier (a zero driver cap
-  // routes to the distributed build) must not be served an artifact
-  // another cap configuration built, even though the rows are provably
-  // identical — the memo entry's lifecycle and build path belong to the
-  // configuration that requested it.
-  private def memoKey(edges: DataFrame, maxDepth: Int, parentCol: String,
-      childCol: String, maxEdges: Long, maxDistributedEdges: Long): Option[String] =
-    graft.PlanKeys.planKey(edges).map(key =>
-      s"$key:$maxDepth:$parentCol:$childCol:$maxEdges:$maxDistributedEdges")
-
-  /** The tier gate: driver BFS only below BOTH the caller's cap and the
-    * measured preference boundary — past ~10k edges the distributed build
-    * wins even though the graph would still fit the driver (see
-    * DriverPreferredMaxEdges).
-    */
-  private def onDriverTier(edges: DataFrame, maxEdges: Long): Boolean =
-    fitsDriver(edges, math.min(maxEdges, DriverPreferredMaxEdges))
-
-  /** The closure frame on an already chosen tier, memoized under `key`:
-    * [[closureSmall]] on the driver tier, else [[closureDistributed]]
-    * when the graph fits the distributed cap (size-probe reuse: fitsDriver
-    * only runs a bounded count, it does not collect; the distributed build
-    * never moves edges to the driver), else None.
-    */
-  private def closureOnTier(key: Option[String], onDriver: Boolean,
-      edges: DataFrame, maxDepth: Int, parentCol: String, childCol: String,
-      maxEdges: Long, maxDistributedEdges: Long): Option[DataFrame] = {
-    val built =
-      if (onDriver) Some(closureSmall(edges, maxDepth, parentCol, childCol, maxEdges))
-      else if (fitsDriver(edges, maxDistributedEdges))
-        closureDistributed(edges, maxDepth, parentCol, childCol)
-      else None
-    // Memo-owned .cache(): a LocalRelation closure re-pays a
-    // single-threaded driver scan of up to maxDepth×maxEdges rows on
-    // EVERY query otherwise; cached, warm queries read columnar batches.
-    // Deliberately not CacheRegistry-registered — the artifact's lifetime
-    // is the memo entry's, like the IVF index.
-    key.fold(built)(k => built.map(c =>
-      remember(closureCache, k, (c.cache(), onDriver))(_._1.unpersist())._1))
-  }
-
-  /** Auto entry point — three regimes by hierarchy size:
-    *   1. fits the driver cap → [[closureSmall]] (driver BFS, broadcast);
-    *   2. fits the distributed cap → [[closureDistributed]] (log2(d)
-    *      shuffle joins, cluster-resident artifact);
-    *   3. else None — the caller must use the frontier walk (a graph this
-    *      size is not a dimension).
-    * Memoized per (plan, depth) when the edge plan has a content identity
-    * — a memo hit skips the size probes too.
-    */
-  def closureAuto(edges: DataFrame, maxDepth: Int,
-      parentCol: String = "parent", childCol: String = "child",
-      maxEdges: Long = DefaultMaxEdges,
-      maxDistributedEdges: Long = DefaultMaxDistributedEdges): Option[DataFrame] = {
-    val key = memoKey(edges, maxDepth, parentCol, childCol, maxEdges,
-      maxDistributedEdges)
-    key.flatMap(k => Option(closureCache.get(k))).map(_._1).orElse(
-      closureOnTier(key, onDriverTier(edges, maxEdges), edges, maxDepth,
-        parentCol, childCol, maxEdges, maxDistributedEdges))
-  }
-
-  /** Point-probe entry point — the bounded closure in the form its tier
-    * answers `(src, dst, ≤ L hops)` counts from, on the same gate and
-    * memo keys as [[closureAuto]]:
-    *   - driver tier → Left([[PathIndex]]): a probe is a hash lookup and
-    *     a binary search on the driver, no Spark job; no closure frame is
-    *     built or cached;
-    *   - distributed tier → Right(the cached closure frame), as
-    *     closureAuto returns it;
+  /** The one entry point — the bounded closure in the form its tier
+    * answers `(src, dst, ≤ L hops)` counts from:
+    *   - up to `maxEdges` edges → Left([[PathIndex]]): one bounded collect
+    *     is both the size probe and the read, and a probe is a hash lookup
+    *     and a binary search on the driver, no Spark job;
+    *   - up to `maxDistributedEdges` → Right([[closureDistributed]]'s
+    *     frame, cached);
     *   - else None — the caller must walk.
-    * A memo hit on either form skips the size probe.
+    * A negative cap refuses its tier for every input; a zero one still
+    * admits an empty edge set.
+    *
+    * Memoized per (plan, depth, columns, caps) when the edge plan has a
+    * content identity. Caps are part of the key: callers forcing a tier (a
+    * zero driver cap routes to the distributed build) must not be served
+    * an artifact another cap configuration built, even though the rows are
+    * provably identical. The memo is bounded like the other artifact
+    * memos: cleared wholesale past 32 entries, each cached frame
+    * unpersisted so a resident service replaying many hierarchy versions
+    * does not accumulate dead columnar batches.
     */
   def pathCountsAuto(edges: DataFrame, maxDepth: Int,
       parentCol: String = "parent", childCol: String = "child",
-      maxEdges: Long = DefaultMaxEdges,
+      maxEdges: Long = DriverPreferredMaxEdges,
       maxDistributedEdges: Long = DefaultMaxDistributedEdges)
       : Option[Either[PathIndex, DataFrame]] = {
-    val key = memoKey(edges, maxDepth, parentCol, childCol, maxEdges,
-      maxDistributedEdges)
-    key.flatMap(k => Option(indexCache.get(k))).map(Left(_)).orElse {
-      val framed = key.flatMap(k => Option(closureCache.get(k)))
-      if (framed.fold(onDriverTier(edges, maxEdges))(_._2)) {
-        val index = closureIndex(edges, maxDepth, parentCol, childCol, maxEdges)
-        Some(Left(key.fold(index)(k => remember(indexCache, k, index)(_ => ()))))
-      } else framed.map(_._1).orElse(closureOnTier(key, onDriver = false,
-          edges, maxDepth, parentCol, childCol, maxEdges, maxDistributedEdges))
-        .map(Right(_))
+    val key = graft.PlanKeys.planKey(edges).map(k =>
+      s"$k:$maxDepth:$parentCol:$childCol:$maxEdges:$maxDistributedEdges")
+    key.flatMap(k => Option(memo.get(k))).orElse {
+      val built = edgesUnder(edges, parentCol, childCol, maxEdges)
+        .map[Either[PathIndex, DataFrame]](es => Left(indexOf(es, maxDepth)))
+        .orElse(if (!fitsUnder(edges, maxDistributedEdges)) None
+          else closureDistributed(edges, maxDepth, parentCol, childCol).map(Right(_)))
+      // Memo-owned .cache(), deliberately not CacheRegistry-registered:
+      // the frame's lifetime is the memo entry's, like the IVF index.
+      key.fold(built)(k => built.map { b =>
+        if (memo.size > 32) {
+          memo.values.forEach(_.foreach(df =>
+            try df.unpersist() catch { case _: Exception => () }))
+          memo.clear()
+        }
+        memo.computeIfAbsent(k, _ => b.map(_.cache()))
+      })
     }
   }
 
   /** Walks into a target bag, per node, on the driver tier: for every
-    * node g of `index` — the driver-tier closure of the (parent, child)
-    * `edges` that [[pathCountsAuto]] returned for `maxDepth` — the sum
-    * over the rows t of `targets(targetCol)` (duplicates count) of the
-    * walks g→t of length 1..maxDepth, plus one when g == t. This is
-    * `sum(n_paths)` of the closure joined to the targets on dst, with the
-    * zero-length walk added: the ABAC group → grant count. Only positive
-    * counts get an entry, and a null id matches nothing.
+    * node g of `index` — the driver-tier closure that [[pathCountsAuto]]
+    * returned for `maxDepth` — the sum over the rows t of
+    * `targets(targetCol)` (duplicates count) of the walks g→t of length
+    * 1..maxDepth, plus one when g == t. This is `sum(n_paths)` of the
+    * closure joined to the targets on dst, with the zero-length walk
+    * added: the ABAC group → grant count. Only positive counts get an
+    * entry, and a null id matches nothing.
     *
-    * Memoized per (edges, targets) content key, so a warm call reads no
-    * table and overwriting either input mints a fresh key. None when the
-    * targets hold more than [[DriverPreferredMaxEdges]] rows: the caller
-    * must join the closure frame instead.
+    * Memoized with `index` per targets content key, so a warm call reads
+    * no table, overwriting the targets mints a fresh key, and the map is
+    * evicted with its index. None when the targets hold more than
+    * [[DriverPreferredMaxEdges]] rows: the caller must join the closure
+    * frame instead.
     */
-  def walksInto(edges: DataFrame, index: PathIndex, maxDepth: Int,
-      targets: DataFrame, targetCol: String): Option[Map[String, Long]] = {
+  def walksInto(index: PathIndex, maxDepth: Int, targets: DataFrame,
+      targetCol: String): Option[Map[String, Long]] = {
     def build = collectUnder(targets.select(targetCol), DriverPreferredMaxEdges)
       .map { rows =>
         val bag = rows.flatMap(r => Option(r.getString(0)))
           .groupMapReduce(identity)(_ => 1L)(_ + _)
         index.walksInto(bag, maxDepth)
       }
-    val key = for {
-      e <- graft.PlanKeys.planKey(edges)
-      t <- graft.PlanKeys.planKey(targets)
-    } yield s"$e:$maxDepth|$t:$targetCol"
-    key.fold(build)(k => remember(intoCache, k, build)(_ => ()))
+    graft.PlanKeys.planKey(targets).fold(build)(t =>
+      index.remember(s"$maxDepth|$t:$targetCol")(build))
   }
 
   /** Distributed bounded bag closure via prefix-decomposition doubling —
@@ -259,7 +178,7 @@ object Closure {
     *
     * Multiplicities are computed in DECIMAL(38,0) and checked back into
     * Long range — a dense graph under the edge cap can push bag counts
-    * past 2^63, and this path must fail as loudly as closureSmall's
+    * past 2^63, and this path must fail as loudly as the driver BFS's
     * Math.addExact does (same contract, reference path-count semantics).
     *
     * Each round localCheckpoints the accumulator: lineage stays one round
@@ -296,7 +215,7 @@ object Closure {
       covered += ext
       if (p.count() > maxRows) return None
     }
-    // Loud overflow check, closureSmall contract parity: a null decimal
+    // Loud overflow check, driver-tier contract parity: a null decimal
     // (overflowed 38 digits) or a value past Long range means the bag
     // multiplicities are not representable — never silently wrap.
     val bad = p.filter(col("n_paths").isNull ||
@@ -315,44 +234,17 @@ object Closure {
       .sortWithinPartitions(col("src"), col("dst")))
   }
 
-  /** All (src, dst, lvl, n_paths) with 1 <= lvl <= maxDepth and n_paths
-    * the number of distinct walks src→dst of length lvl. Rows appear once
-    * per (src, dst, lvl) — the bag cardinality rides in n_paths, so
-    * `sum(n_paths)` over a join equals `count(*)` over the expanded walk.
-    * A null node starts and continues no walk; an edge into null ends one.
-    */
-  def closureSmall(edges: DataFrame, maxDepth: Int,
-      parentCol: String = "parent", childCol: String = "child",
-      maxEdges: Long = DefaultMaxEdges): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val out = driverWalks(edges, maxDepth, parentCol, childCol, maxEdges)
-    val df = out.toSeq.toDF("src", "dst", "lvl", "n_paths")
-    // A driver-built closure is a single-partition LocalRelation; once it
-    // grows past trivial size, every warm query over the cached artifact
-    // would scan it on one core (measured: 3M rows ≈ 3.2 s/query at
-    // local[32] vs 0.14 s spread). Spread big artifacts at build time —
-    // and CLUSTER them: range-partitioned on src and sorted within
-    // partitions, the cached columnar batches carry tight src/dst
-    // min/max stats, so a reachability point probe (filter src=X) prunes
-    // to ~one batch instead of scanning the whole artifact
-    // (InMemoryTableScan batch pruning). One shuffle, paid once at
-    // build; tiny hierarchies (the common ABAC case) stay
-    // single-partition and skip the per-query many-task overhead.
-    if (out.length > 10000)
-      df.repartitionByRange(spark.sparkContext.defaultParallelism,
-          col("src"), col("dst"))
-        .sortWithinPartitions(col("src"), col("dst"))
-    else df
-  }
-
-  /** The rows of [[closureSmall]] as a driver-resident [[PathIndex]]:
-    * same edge cap, same BFS, same loud overflow.
+  /** The driver tier's [[PathIndex]] of `edges`, from one collect under
+    * `maxEdges`; fails past it ([[pathCountsAuto]] is the gated form).
+    * Overflows loudly, like the BFS.
     */
   def closureIndex(edges: DataFrame, maxDepth: Int,
       parentCol: String = "parent", childCol: String = "child",
-      maxEdges: Long = DefaultMaxEdges): PathIndex =
-    PathIndex(driverWalks(edges, maxDepth, parentCol, childCol, maxEdges))
+      maxEdges: Long = DriverPreferredMaxEdges): PathIndex =
+    indexOf(edgesUnder(edges, parentCol, childCol, maxEdges).getOrElse(
+      throw new IllegalArgumentException(
+        s"closureIndex: graph exceeds $maxEdges edges — use pathCountsAuto")),
+      maxDepth)
 
   /** Rooted walk count on the driver tier: the number of walks of length
     * 1..maxDepth from `root` — `count(*)` over [[Traverse.expand]] from a
@@ -431,22 +323,17 @@ object Closure {
     }
   }
 
-  /** The driver tier's closure kernel: collects the edge list under the
-    * cap, then runs [[walksFrom]] from every non-null node. One (src, dst,
-    * lvl, n_paths) row per walk length that reaches dst.
+  /** The driver tier's closure of a collected edge list: [[walksFrom]]
+    * from every node with a child, one (src, dst, lvl, n_paths) row per
+    * walk length that reaches dst, indexed.
     */
-  private def driverWalks(edges: DataFrame, maxDepth: Int, parentCol: String,
-      childCol: String, maxEdges: Long): Array[(String, String, Int, Long)] = {
-    val collected = edgesUnder(edges, parentCol, childCol, maxEdges)
-    require(collected.isDefined,
-      s"closureSmall: graph exceeds $maxEdges edges — use Traverse.expand")
-    val es = collected.get
+  private def indexOf(es: Array[(String, String)], maxDepth: Int): PathIndex = {
     val adj = adjacency(es)
     val rows = Array.newBuilder[(String, String, Int, Long)]
-    (es.map(_._1) ++ es.map(_._2)).distinct.filter(_ != null).foreach { src =>
+    adj.keys.foreach { src =>
       walksFrom(adj, src, maxDepth)((dst, lvl, cnt) => rows += ((src, dst, lvl, cnt)))
     }
-    rows.result()
+    PathIndex(rows.result())
   }
 
   /** Point-lookup form of a driver-tier closure: for each (src, dst) the
@@ -458,6 +345,17 @@ object Closure {
     */
   final class PathIndex private (spans: Map[String, (Int, Int)],
       dsts: Array[String], lvls: Array[Int], running: Array[Long]) {
+
+    // Closure.walksInto's grant maps, kept with the index they derive
+    // from so that they are evicted with it; cleared past 32 target bags.
+    private val grants =
+      scala.collection.concurrent.TrieMap[String, Option[Map[String, Long]]]()
+
+    private[graph] def remember(key: String)(
+        build: => Option[Map[String, Long]]): Option[Map[String, Long]] = {
+      if (grants.size > 32) grants.clear()
+      grants.getOrElseUpdate(key, build)
+    }
 
     /** `sum(n_paths)` over the closure rows (src, dst, lvl <= maxLvl);
       * 0 when there are none.
@@ -513,13 +411,14 @@ object Closure {
   }
 
   object PathIndex {
-    /** Index (src, dst, lvl, n_paths) rows, one per (src, dst, lvl). The
+    /** Index (src, dst, lvl, n_paths) rows, one per (src, dst, lvl) with a
+      * non-null src. The
       * running sums are checked like the BFS: a pair whose walks within
       * maxDepth overflow Long fails the build rather than wrap. Rows with a
-      * null end are dropped — no equality probe can match them.
+      * null dst are dropped — no equality probe can match them.
       */
     private[graph] def apply(rows: Array[(String, String, Int, Long)]): PathIndex = {
-      val sorted = rows.filter(r => r._1 != null && r._2 != null)
+      val sorted = rows.filter(_._2 != null)
         .sortBy(r => (r._1, r._2, r._3))
       val n = sorted.length
       val dsts = new Array[String](n)

@@ -313,24 +313,4 @@ object Traverse {
         rcteEdgeMemo.computeIfAbsent(k, _ => edges.localCheckpoint())
       case None => edges.localCheckpoint()
     }
-
-  /** Path-count between a single source and a single target within `maxLen`
-    * hops: the web-of-trust shape (reference:
-    * demo_did_graph/04_web_of_trust/benchmark_scenario_d.py:200-203 counts
-    * one row per path — duplicates kept).
-    */
-  def pathCount(
-      edges: DataFrame,
-      source: String,
-      target: String,
-      maxLen: Int,
-      parentCol: String = "parent",
-      childCol: String = "child"): Long = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val seed = Seq(source).toDF("node")
-    expand(seed, edges, maxLen, parentCol, childCol)
-      .filter(col("node") === target)
-      .count()
-  }
 }

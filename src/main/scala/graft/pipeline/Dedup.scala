@@ -965,7 +965,7 @@ object Dedup {
 
   /** Max pairs collected to the driver by [[componentsAuto]]'s small
     * tier; above this the delta iteration runs. Same bounded-driver-read
-    * contract as [[graft.graph.Closure.DefaultMaxEdges]].
+    * contract as [[graft.graph.Closure.DriverPreferredMaxEdges]].
     */
   val DefaultMaxDriverPairs = 500000L
 
@@ -986,7 +986,7 @@ object Dedup {
   }
 
   /** Auto entry point for near-dup clustering, tiered like
-    * [[graft.graph.Closure.closureAuto]]: a pair list that fits the
+    * [[graft.graph.Closure.pathCountsAuto]]: a pair list that fits the
     * driver cap resolves via union-find in one pass ([[componentsSmall]]
     * — the near-dup PAIR list is usually dimension-shaped even when the
     * corpus is not, because most documents have no near-duplicate at

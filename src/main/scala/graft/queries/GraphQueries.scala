@@ -170,13 +170,13 @@ object GraphQueries {
     * cap: same semantics and oracle as [[r3WotPathCount]], but the bag
     * closure is built with log2(d) shuffle joins
     * ([[graft.graph.Closure.closureDistributed]]) instead of the driver
-    * BFS — the gate pins the middle regime an over-100k-edge hierarchy
-    * takes at scale (e.g. the sf1 trust chain).
+    * BFS — the gate pins the middle regime a hierarchy past the driver
+    * cap takes at scale (e.g. the sf1 trust chain).
     */
   def r3WotPathCountDist(spark: SparkSession, d: String): DataFrame = {
     val chain = GraphData.trustChain(spark, d)
-    val closure = graft.graph.Closure
-      .closureAuto(chain, maxDepth = 20, maxEdges = 0L)
+    val closure = Closure.pathCountsAuto(chain, maxDepth = 20, maxEdges = 0L)
+      .flatMap(_.toOption)
       .getOrElse(sys.error("distributed closure tier unavailable"))
     closure.filter(col("src") === "E0" && col("dst") === "E15")
       .agg(coalesce(sum(col("n_paths")), lit(0L)).as("n_paths"))
@@ -235,14 +235,14 @@ object GraphQueries {
     * The hierarchy is a dimension (25 groups in r4), so the plan comes
     * from its measured size — one [[graft.graph.Closure.pathCountsAuto]]
     * call picks the arm:
-    *   - driver tier (under `maxEdges` and DriverPreferredMaxEdges): the
-    *     group → grant-count map ([[graft.graph.Closure.walksInto]],
-    *     memoized per subgroup and permission content, so a warm decision
-    *     reads no permission table) answers the membership read once
-    *     under `maxMembers` rows, returned as a local frame; collecting
-    *     it starts no further job. Past `maxMembers` the membership scan
-    *     joins the map as a broadcast local relation; a permission bag
-    *     past the driver cap takes the closure frame's plan;
+    *   - driver tier (under `maxEdges`): the group → grant-count map
+    *     ([[graft.graph.Closure.walksInto]], memoized per subgroup and
+    *     permission content, so a warm decision reads no permission
+    *     table) answers the membership read once under `maxMembers`
+    *     rows, returned as a local frame; collecting it starts no further
+    *     job. Past `maxMembers` the membership scan joins the map as a
+    *     broadcast local relation; a permission bag past the driver cap
+    *     takes the distributed closure frame's plan;
     *   - distributed tier (under `maxDistributedEdges`): the closure frame
     *     joined to the permission rows, with the lvl-0 self grant, as ONE
     *     broadcast over a single scan of the membership side;
@@ -251,7 +251,7 @@ object GraphQueries {
     */
   def abacDecision(member: DataFrame, subgroup: DataFrame, perm: DataFrame,
       maxDepth: Int,
-      maxEdges: Long = Closure.DefaultMaxEdges,
+      maxEdges: Long = Closure.DriverPreferredMaxEdges,
       maxDistributedEdges: Long = Closure.DefaultMaxDistributedEdges,
       maxMembers: Long = Closure.DriverPreferredMaxEdges): DataFrame = {
     val users = member.select(col("user_id"), col("group_id").as("node"))
@@ -270,7 +270,7 @@ object GraphQueries {
     Closure.pathCountsAuto(subgroup, maxDepth, maxEdges = maxEdges,
         maxDistributedEdges = maxDistributedEdges) match {
       case Some(Left(index)) =>
-        Closure.walksInto(subgroup, index, maxDepth, perm, "group_id") match {
+        Closure.walksInto(index, maxDepth, perm, "group_id") match {
           case Some(grants) =>
             Closure.collectUnder(users, maxMembers) match {
               case Some(rows) => grantedLocally(users, rows, grants)
@@ -278,8 +278,9 @@ object GraphQueries {
                 import member.sparkSession.implicits._
                 joined(grants.toSeq.toDF("src", "n_paths"))
             }
-          case None => overClosure(Closure.closureAuto(subgroup, maxDepth,
-              maxEdges = maxEdges, maxDistributedEdges = maxDistributedEdges).get)
+          // A negative driver cap forces the distributed frame.
+          case None => overClosure(Closure.pathCountsAuto(subgroup, maxDepth,
+              maxEdges = -1L).flatMap(_.toOption).get)
         }
       case Some(Right(closure)) => overClosure(closure)
       case None =>

@@ -144,25 +144,24 @@ object DynamicReplay {
     * per depth (benchmark_scenario_a.py:36-45).
     */
   def turnTaking(spark: SparkSession, sfDir: String,
-      depths: Seq[Int] = DefaultDepths): DataFrame = {
-    var delegation = baseDelegation(spark, sfDir)
-    val rows = depths.zipWithIndex.map { case (depth, i) =>
-      val step = i + 1
-      delegation = settle(mutateStep(delegation, step))
-      chainCount(spark, delegation, depth)
-        .select(lit(step).as("step"), lit(depth).as("depth"), col("n"))
-    }
-    rows.reduce(_ unionByName _).orderBy(col("step"))
-  }
+      depths: Seq[Int] = DefaultDepths): DataFrame =
+    mutateAndCount(spark, sfDir, depths)
 
   /** Scenario 2 (chain-churn): cycle the depth up and back down, mutating a
     * fresh modular family before each probe
     * (benchmark_scenario_a.py:49-68 — `depth_cycle`).
     */
   def chainChurn(spark: SparkSession, sfDir: String,
-      cycle: Seq[Int] = DefaultCycle): DataFrame = {
+      cycle: Seq[Int] = DefaultCycle): DataFrame =
+    mutateAndCount(spark, sfDir, cycle)
+
+  /** One [[mutateStep]] per depth, each followed by the chain count at
+    * that depth: `(step, depth, n)` rows sorted by step.
+    */
+  private def mutateAndCount(spark: SparkSession, sfDir: String,
+      depths: Seq[Int]): DataFrame = {
     var delegation = baseDelegation(spark, sfDir)
-    val rows = cycle.zipWithIndex.map { case (depth, i) =>
+    val rows = depths.zipWithIndex.map { case (depth, i) =>
       val step = i + 1
       delegation = settle(mutateStep(delegation, step))
       chainCount(spark, delegation, depth)

@@ -10,7 +10,8 @@ import scala.collection.mutable
   * `iters` times hot; every run is a `count()`, as in the bench, followed
   * by `CacheRegistry.releaseAll()`. Per query it prints one JSON line
   * (cold_s, hot_p50_s, hot_min_s), then the last hot run's Spark jobs
-  * with wall time and description, and its stages of at least 200 ms.
+  * with wall time and description (else call site), and its stages of
+  * at least 200 ms.
   * In local mode each BroadcastExchange build is its own job, so a
   * storm of serial broadcast builds shows up as a long job list.
   *
@@ -32,9 +33,13 @@ object Profile {
         : (Vector[(Int, Long, String)], Vector[(Int, Long, Int, String)]) =
       synchronized((jobs.toVector, stages.toVector))
 
+    // The engine sets no job description, so a job without one is named
+    // by its result stage (the highest stage id), whose name is the
+    // action's call site, e.g. `collect at Closure.scala:<line>`.
     override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
       open(js.jobId) = (js.time, Option(js.properties)
         .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
         .getOrElse(""))
     }
     override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {

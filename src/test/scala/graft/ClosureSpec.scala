@@ -1,25 +1,63 @@
 package graft
 
 import graft.graph.{Closure, Traverse}
-import org.apache.spark.sql.functions.{col, sum, when}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closure correctness: bag path multiplicities must equal the expanded
   * frontier walk's row counts — the closure is a physical rewrite of the
-  * walk, never a semantic change.
+  * walk, never a semantic change. The reference is [[enumerate]], a
+  * brute-force walk enumerator that shares no code with either tier.
   */
 class ClosureSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  type Rows = Set[(String, String, Int, Long)]
+
+  /** Every walk of 1..maxDepth edges, one at a time, counted per (src,
+    * dst, lvl). An edge from a null parent is a walk of its own, and no
+    * walk continues through a null node: the distributed frame's rows.
+    */
+  private def enumerate(es: Seq[(String, String)], maxDepth: Int): Rows = {
+    val n = scala.collection.mutable.Map[(String, String, Int), Long]()
+    def walk(src: String, end: String, lvl: Int): Unit = {
+      n((src, end, lvl)) = n.getOrElse((src, end, lvl), 0L) + 1
+      if (lvl < maxDepth && end != null)
+        es.filter(_._1 == end).foreach(e => walk(src, e._2, lvl + 1))
+    }
+    es.foreach(e => walk(e._1, e._2, 1))
+    n.map { case ((s, d, l), k) => (s, d, l, k) }.toSet
+  }
+
+  /** The rows a [[Closure.PathIndex]] answers from: no null end. */
+  private def indexed(rows: Rows): Rows =
+    rows.filter(r => r._1 != null && r._2 != null)
+
+  /** A closure frame's rows, summed per (src, dst, lvl): every consumer
+    * sums n_paths, and the distributed frame keeps a duplicate edge as two
+    * lvl-1 rows. */
+  private def collected(df: DataFrame): Rows =
+    df.as[(String, String, Int, Long)].collect()
+      .groupMapReduce(r => (r._1, r._2, r._3))(_._4)(_ + _)
+      .map { case ((s, d, l), k) => (s, d, l, k) }.toSet
+
+  /** `index` against `want` for every pair of `nodes` and every length. */
+  private def assertIndex(index: Closure.PathIndex, want: Rows,
+      nodes: Seq[String], lens: Seq[Long], clue: => String): Unit =
+    for (s <- nodes; d <- nodes; l <- lens) {
+      val expected = want.iterator
+        .collect { case (`s`, `d`, lvl, k) if lvl <= l => k }.sum
+      assert(index.pathCount(s, d, l) == expected, s"($s, $d, L=$l) $clue")
+    }
+
   test("diamond multiplicity: two paths to the sink, counted not deduped") {
-    val e = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"))
-      .toDF("parent", "child")
-    val rows = Closure.closureSmall(e, maxDepth = 3)
-      .as[(String, String, Int, Long)].collect().toSet
-    assert(rows.contains(("a", "b", 1, 1L)))
-    assert(rows.contains(("a", "c", 1, 1L)))
-    assert(rows.contains(("a", "d", 2, 2L)), s"diamond must count 2: $rows")
+    val es = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"))
+    assert(enumerate(es, 3).contains(("a", "d", 2, 2L)))
+    val index = Closure.closureIndex(es.toDF("parent", "child"), maxDepth = 3)
+    assert(index.pathCount("a", "b", 1) == 1L && index.pathCount("a", "c", 1) == 1L)
+    assert(index.pathCount("a", "d", 1) == 0L)
+    assert(index.pathCount("a", "d", 2) == 2L, "diamond must count 2")
   }
 
   test("closure equals the expanded walk on random graphs (bag semantics)") {
@@ -33,44 +71,42 @@ class ClosureSpec extends AnyFunSuite {
       val es = Gen.listOfN(12, edgeGen)(Gen.Parameters.default, Seed(7L + i))
         .getOrElse(Nil).distinct
       val e = es.toDF("parent", "child")
-      val closure = Closure.closureSmall(e, maxDepth = 4)
-        .as[(String, String, Int, Long)].collect()
-        .groupBy(t => (t._1, t._2)).view.mapValues(_.map(_._4).sum).toMap
+      val index = Closure.closureIndex(e, maxDepth = 4)
       nodes.take(3).foreach { src =>
         val walked = Traverse.expand(Seq(src).toDF("node"), e, maxDepth = 4)
           .groupBy("node").count()
           .as[(String, Long)].collect().toMap
         CacheRegistry.releaseAll()
-        val fromClosure = closure.collect {
-          case ((s, d), n) if s == src => d -> n
-        }
-        assert(fromClosure == walked,
-          s"seed $src case $i: closure $fromClosure != walk $walked")
+        val fromIndex = nodes.map(d => d -> index.pathCount(src, d, 4))
+          .filter(_._2 > 0).toMap
+        assert(fromIndex == walked,
+          s"seed $src case $i: index $fromIndex != walk $walked")
       }
     }
   }
 
-  test("closureAuto refuses over-cap graphs, memoizes file-backed ones") {
+  test("pathCountsAuto refuses over-cap graphs, never shares in-memory ones") {
     val e = Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("parent", "child")
-    assert(Closure.closureAuto(e, maxDepth = 2, maxEdges = 2L,
+    assert(Closure.pathCountsAuto(e, maxDepth = 2, maxEdges = 2L,
         maxDistributedEdges = 2L).isEmpty,
       "3 edges over BOTH caps must refuse every closure tier")
     // In-memory edges (LocalRelation): computed, not memoized — two
     // different graphs must not share a closure.
-    val g1 = Closure.closureAuto(e, maxDepth = 3).get
-      .as[(String, String, Int, Long)].collect().toSet
-    val e2 = Seq(("x", "y")).toDF("parent", "child")
-    val g2 = Closure.closureAuto(e2, maxDepth = 3).get
-      .as[(String, String, Int, Long)].collect().toSet
-    assert(g1 != g2 && g2 == Set(("x", "y", 1, 1L)))
+    def index(df: DataFrame) =
+      Closure.pathCountsAuto(df, maxDepth = 3).flatMap(_.left.toOption).get
+    val g1 = index(e)
+    val g2 = index(Seq(("x", "y")).toDF("parent", "child"))
+    assert(g1.pathCount("a", "d", 3) == 1L && g1.pathCount("x", "y", 3) == 0L)
+    assert(g2.pathCount("x", "y", 3) == 1L && g2.pathCount("a", "d", 3) == 0L)
   }
 
   test("distributed closure is bit-identical to the driver closure") {
     // The doubling decomposition (exact-L prefix ⋈ ≤ext suffix) must
-    // reproduce closureSmall's rows exactly — same (src, dst, lvl)
-    // set, same bag multiplicities — on shapes that exercise diamonds
-    // (multiplicity merging), cycles (walks revisit nodes), and odd
-    // depths (the final partial round, ext < covered).
+    // reproduce every walk — same (src, dst, lvl) set, same bag
+    // multiplicities — on shapes that exercise diamonds (multiplicity
+    // merging), cycles (walks revisit nodes), odd depths (the final
+    // partial round, ext < covered), duplicates, self-loops and null ends;
+    // the driver tier's index answers the same counts.
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val nodes = ('a' to 'h').map(_.toString)
@@ -80,14 +116,16 @@ class ClosureSpec extends AnyFunSuite {
     val cases = (1 to 3).map { i =>
       Gen.listOfN(12, edgeGen)(Gen.Parameters.default, Seed(31L + i))
         .getOrElse(Nil).distinct
-    } :+ Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "a"))
+    } ++ Seq(Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "a")),
+      Seq(("a", null), (null, "b"), ("b", "c"), ("b", "c"), ("c", "c"),
+        ("c", "a")))
     for (es <- cases; depth <- Seq(1, 3, 4, 7)) {
       val e = es.toDF("parent", "child")
-      val small = Closure.closureSmall(e, maxDepth = depth)
-        .as[(String, String, Int, Long)].collect().toSet
+      val want = enumerate(es, depth)
       val dist = Closure.closureDistributed(e, maxDepth = depth).get
-        .as[(String, String, Int, Long)].collect().toSet
-      assert(dist == small, s"depth $depth edges $es")
+      assert(collected(dist) == want, s"depth $depth edges $es")
+      assertIndex(Closure.closureIndex(e, maxDepth = depth), indexed(want),
+        nodes, Seq(depth.toLong), s"depth $depth edges $es")
     }
   }
 
@@ -97,56 +135,52 @@ class ClosureSpec extends AnyFunSuite {
       "a closure larger than maxRows must return None, not materialize")
   }
 
-  test("closureAuto uses the distributed tier between the caps") {
-    val e = Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("parent", "child")
-    // Driver cap 2 < 3 edges <= distributed cap: the middle tier must
-    // produce the same closure the driver path would.
-    val viaAuto = Closure.closureAuto(e, maxDepth = 3, maxEdges = 2L)
-      .get.as[(String, String, Int, Long)].collect().toSet
-    val viaSmall = Closure.closureSmall(e, maxDepth = 3)
-      .as[(String, String, Int, Long)].collect().toSet
-    assert(viaAuto == viaSmall)
-    // Both caps exceeded: still None — the walk stays the plan.
-    assert(Closure.closureAuto(e, maxDepth = 3, maxEdges = 2L,
-      maxDistributedEdges = 2L).isEmpty)
+  test("pathCountsAuto's gate: index up to the driver cap, frame past it") {
+    val chain = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"))
+    def tier(es: Seq[(String, String)], maxEdges: Long,
+        maxDistributedEdges: Long = Closure.DefaultMaxDistributedEdges) =
+      Closure.pathCountsAuto(es.toDF("parent", "child"), maxDepth = 3,
+        maxEdges = maxEdges, maxDistributedEdges = maxDistributedEdges)
+    // Exactly `cap` edges stay on the driver, and the index is the closure.
+    val atCap = tier(chain.take(3), 3L).flatMap(_.left.toOption)
+      .getOrElse(fail("3 edges at a cap of 3 must take the driver tier"))
+    assertIndex(atCap, enumerate(chain.take(3), 3), Seq("a", "b", "c", "d"),
+      Seq(1L, 3L), "at the cap")
+    // One past it, the distributed frame, with the same rows.
+    val past = tier(chain, 3L).flatMap(_.toOption)
+      .getOrElse(fail("4 edges past a cap of 3 must take the distributed tier"))
+    assert(collected(past) == enumerate(chain, 3))
+    assert(tier(chain, 3L, maxDistributedEdges = 4L).exists(_.isRight))
+    // Past both caps: no closure, the caller walks.
+    assert(tier(chain, 3L, maxDistributedEdges = 3L).isEmpty)
+    // A zero cap still admits an empty edge set.
+    assert(tier(Seq.empty, 0L).exists(_.isLeft))
   }
 
   test("a null node ends a walk and never bridges two") {
     // Traverse.expand joins on parent = node and a null key never joins:
     // a→null is a walk of length 1, and null→b extends no walk.
-    val e = Seq[(String, String)](("a", null), (null, "b"), ("b", "c"))
-      .toDF("parent", "child")
+    val es = Seq[(String, String)](("a", null), (null, "b"), ("b", "c"))
+    val e = es.toDF("parent", "child")
     val walked = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 3)
       .as[(String, Int)].collect().toSeq
     CacheRegistry.releaseAll()
     assert(walked == Seq((null, 1)))
-    val rows = Closure.closureSmall(e, maxDepth = 3)
-      .as[(String, String, Int, Long)].collect().toSet
-    assert(rows == Set(("a", null, 1, 1L), ("b", "c", 1, 1L)))
-    assert(Closure.closureIndex(e, maxDepth = 3).pathCount("a", "b", 3) == 0L)
+    val want = enumerate(es, 3)
+    assert(want == Set(("a", null, 1, 1L), (null, "b", 1, 1L),
+      (null, "c", 2, 1L), ("b", "c", 1, 1L)))
+    assert(collected(Closure.closureDistributed(e, maxDepth = 3).get) == want)
+    assertIndex(Closure.closureIndex(e, maxDepth = 3), indexed(want),
+      Seq("a", "b", "c"), Seq(1L, 3L), "null ends")
     assert(Closure.walkCountFrom(e, "a", 3) == Some(1L))
   }
 
-  test("closureSmall fails loudly on path-multiplicity overflow") {
-    // A small complete digraph under the edge cap grows bag counts as
-    // ~(n-1)^lvl: 20 nodes, depth 20 → 19^20 ≈ 4e25 >> Long.MaxValue.
-    // A silent wrap would return wrong (possibly negative) path counts;
-    // the contract is a nameable ArithmeticException instead.
-    val nodes = (0 until 20).map(i => s"n$i")
-    val dense = (for (a <- nodes; b <- nodes if a != b) yield (a, b))
-      .toDF("parent", "child")
-    val ex = intercept[ArithmeticException] {
-      Closure.closureSmall(dense, maxDepth = 20).count()
-    }
-    assert(ex.getMessage.contains("overflow"))
-  }
-
-  test("index lookups equal closureSmall's filter + sum on generated graphs") {
-    // For every (src, dst, L): PathIndex.pathCount == sum(n_paths) over
-    // closureSmall rows with that src and dst and lvl <= L. Node pools mix
-    // ASCII, multi-byte and 300-char ids; edges are drawn with
-    // replacement (duplicates) and may be self-loops or close cycles;
-    // the fixed cases add a diamond and an empty edge set.
+  test("index lookups equal the walk enumerator on generated graphs") {
+    // For every (src, dst, L): PathIndex.pathCount == the walks src→dst of
+    // length <= L. Node pools mix ASCII, multi-byte and 300-char ids;
+    // edges are drawn with replacement (duplicates) and may be self-loops
+    // or close cycles; the fixed cases add a diamond, null ends and an
+    // empty edge set.
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val ids = Seq("a", "b", "c", "d", "é", "节点", "\uD83D\uDE81drone",
@@ -161,24 +195,17 @@ class ClosureSpec extends AnyFunSuite {
       graphGen(Gen.Parameters.default, Seed(101L + i)))
     val diamond = Seq(("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"),
       ("d", "a"), ("a", "b"))
-    val cases = generated ++ Seq((diamond, 4), (Seq.empty[(String, String)], 3))
+    val nullEnds = Seq[(String, String)](("a", null), (null, "b"),
+      ("b", "c"), ("a", "b"), ("b", null))
+    val cases = generated ++ Seq((diamond, 4), (nullEnds, 3),
+      (Seq.empty[(String, String)], 3))
     assert(generated.exists { case (es, _) => es.exists(e => e._1 == e._2) })
     for ((es, depth) <- cases) {
-      val e = es.toDF("parent", "child")
-      val index = Closure.closureIndex(e, maxDepth = depth)
-      val lens = Seq(-1L, 0L, 1L, depth.toLong)
-      val sums = lens.map(l => sum(when(col("lvl") <= l, col("n_paths"))))
-      val want = Closure.closureSmall(e, maxDepth = depth)
-        .groupBy(col("src"), col("dst")).agg(sums.head, sums.tail: _*)
-        .collect().map(r => (r.getString(0), r.getString(1)) ->
-          lens.indices.map(i => if (r.isNullAt(i + 2)) 0L else r.getLong(i + 2)))
-        .toMap
+      val index = Closure.closureIndex(es.toDF("parent", "child"), maxDepth = depth)
       val nodes = (es.flatMap(e => Seq(e._1, e._2)) :+ "absent").distinct
-      for (s <- nodes; d <- nodes; (l, i) <- lens.zipWithIndex) {
-        val expected = want.get((s, d)).fold(0L)(_(i))
-        assert(index.pathCount(s, d, l) == expected,
-          s"($s, $d, L=$l) depth $depth edges $es")
-      }
+        .filter(_ != null)
+      assertIndex(index, indexed(enumerate(es, depth)), nodes,
+        Seq(-1L, 0L, 1L, depth.toLong), s"depth $depth edges $es")
     }
     // The diamond's duplicate a→b edge makes three walks a→b→d, a→b→d,
     // a→c→d.
@@ -187,6 +214,10 @@ class ClosureSpec extends AnyFunSuite {
   }
 
   test("closureIndex fails loudly on path-multiplicity overflow") {
+    // A small complete digraph under the edge cap grows bag counts as
+    // ~(n-1)^lvl: 20 nodes, depth 20 → 19^20 ≈ 4e25 >> Long.MaxValue.
+    // A silent wrap would return wrong (possibly negative) path counts;
+    // the contract is a nameable ArithmeticException instead.
     val nodes = (0 until 20).map(i => s"n$i")
     val dense = (for (a <- nodes; b <- nodes if a != b) yield (a, b))
       .toDF("parent", "child")
@@ -198,11 +229,9 @@ class ClosureSpec extends AnyFunSuite {
 
   test("pathCountsAuto serves the driver tier as a memoized index") {
     val dir = java.nio.file.Files.createTempDirectory("graft_pc").toString
-    Seq(("a", "b"), ("b", "c"), ("a", "c")).toDF("parent", "child")
-      .write.mode("overwrite").parquet(dir)
+    val es = Seq(("a", "b"), ("b", "c"), ("a", "c"))
+    es.toDF("parent", "child").write.mode("overwrite").parquet(dir)
     val e = spark.read.parquet(dir)
-    // A closure frame memoized first does not hide the driver tier.
-    Closure.closureAuto(e, maxDepth = 3)
     val first = Closure.pathCountsAuto(e, maxDepth = 3)
     val index = first.flatMap(_.left.toOption)
       .getOrElse(fail(s"driver tier must serve an index: $first"))
@@ -212,11 +241,23 @@ class ClosureSpec extends AnyFunSuite {
     // A zero driver cap takes the distributed tier: the closure frame.
     val dist = Closure.pathCountsAuto(e, maxDepth = 3, maxEdges = 0L)
       .flatMap(_.toOption).getOrElse(fail("distributed tier must serve the frame"))
-    assert(dist.as[(String, String, Int, Long)].collect().toSet ==
-      Closure.closureSmall(e, maxDepth = 3).as[(String, String, Int, Long)]
-        .collect().toSet)
+    assert(collected(dist) == enumerate(es, 3))
     assert(Closure.pathCountsAuto(e, maxDepth = 3, maxEdges = 2L,
       maxDistributedEdges = 2L).isEmpty)
+  }
+
+  test("a cold driver-tier build reads the edges once") {
+    // The bounded collect is its own size probe: no count job before it.
+    val dir = java.nio.file.Files.createTempDirectory("graft_once").toString
+    Seq(("a", "b"), ("b", "c"), ("c", "d")).toDF("parent", "child")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val e = spark.read.parquet(dir)
+    var built: Option[Either[Closure.PathIndex, DataFrame]] = None
+    val cold = JobWatch(spark) { built = Closure.pathCountsAuto(e, maxDepth = 3) }
+    assert(built.exists(_.isLeft), s"3 edges must take the driver tier: $built")
+    val collect = JobWatch(spark)(
+      e.limit(Closure.DriverPreferredMaxEdges.toInt + 1).collect())
+    assert(cold.jobs <= collect.jobs, s"cold build $cold vs one collect $collect")
   }
 
   test("distributed closure fails loudly past Long-range multiplicities") {

@@ -24,8 +24,9 @@ class PreparedSpec extends AnyFunSuite {
   /** The distributed tier's statement over `dir`'s trust chain, forced by
     * a zero driver cap. */
   private def distributed(dir: String) =
-    Prepared.overClosure(spark, Closure.closureAuto(
-        GraphData.trustChain(spark, dir), 20, maxEdges = 0L).get, 20)
+    Prepared.overClosure(spark, Closure.pathCountsAuto(
+        GraphData.trustChain(spark, dir), 20, maxEdges = 0L)
+      .flatMap(_.toOption).get, 20)
 
   private def jobsIn(body: => Unit): Int = JobWatch(spark)(body).jobs
 

@@ -152,9 +152,4 @@ class TraverseSpec extends AnyFunSuite {
     assert(paths == Set("a->b->d", "a->c->d"),
       "diamond yields two distinct materialized paths")
   }
-
-  test("pathCount counts bag paths between endpoints") {
-    val e = edges("s" -> "m1", "s" -> "m2", "m1" -> "t", "m2" -> "t")
-    assert(Traverse.pathCount(e, "s", "t", 3) == 2)
-  }
 }

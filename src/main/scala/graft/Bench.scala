@@ -1287,7 +1287,7 @@ object Bench {
         .withColumn("broker_ts_ms", unix_millis(current_timestamp()))
       val q = parsed.writeStream.outputMode("append")
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          state.set(CdcStream.mergeCdcBatch(state.get(batch.sparkSession), batch))
+          state.merge(batch)
           // Apply stamp evaluates when this write runs — after the merge.
           CdcStream.latencySegments(batch)
             .select("lat_capture_to_broker", "lat_broker_to_apply", "lat_e2e")

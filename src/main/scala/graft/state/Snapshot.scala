@@ -107,11 +107,20 @@ object Snapshot {
     * form of the reference's per-row dispatch loop.
     */
   def applyCdc(events: DataFrame, keys: Seq[String], orderCols: Seq[Column],
-      opCol: String = "op", deleteOp: String = "d"): DataFrame = {
+      opCol: String = "op", deleteOp: String = "d"): DataFrame =
+    latestPerKey(events, keys, orderCols).filter(col(opCol) =!= deleteOp)
+
+  /** The last-writer-wins kernel: the latest row per key by `orderCols`,
+    * each descending with nulls last, so a null stamp loses to any stamp.
+    * Null keys form one group. Rows equal on every order column tie, and
+    * either may win. [[applyCdc]] and both arms of the CDC stream's merge
+    * (`CdcStream.lastPerKey` and its driver-side twin) order by this rule.
+    */
+  def latestPerKey(events: DataFrame, keys: Seq[String],
+      orderCols: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(orderCols.map(_.desc): _*)
     events.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col(opCol) =!= deleteOp)
-      .drop("__rn")
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** Snapshot reconciliation: classify every key across two snapshot

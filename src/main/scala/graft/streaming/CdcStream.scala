@@ -1,10 +1,13 @@
 package graft.streaming
 
 import graft.functions.Debezium
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.graph.Closure
+import graft.state.Snapshot
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming CDC pipeline (SURVEY.md §2.10, §3.3).
   *
@@ -15,7 +18,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * `change_id > last_id` cursor), the broker hop is `readStream.format
   * ("kafka")`, and the sink loop is an idempotent `foreachBatch` merge:
   *
-  *   kafka/file source → from_json(debezium) → foreachBatch(mergeCdcBatch)
+  *   kafka/file source → from_json(debezium) → foreachBatch(SnapshotHandle.merge)
   *
   * Exactly-once-ish semantics come from source offsets + idempotent keyed
   * merge (the reference's upsert achieves the same:
@@ -23,10 +26,15 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * resume — the replay-ordering logic of 03_recovery.py collapses into the
   * source; [[replayStats]] reproduces its rate metrics.
   *
-  * Scale: the only shuffle per micro-batch is the per-key reduction
-  * (last-writer-wins window); the snapshot merge is an anti-join on the
-  * key, broadcast when the batch is chunk-sized. State never lives in the
-  * driver. With a transactional table format the merge maps to MERGE INTO.
+  * Scale: a micro-batch costs O(batch) while the snapshot fits the driver
+  * cap. [[SnapshotHandle]] then keeps the snapshot on the driver as a keyed
+  * map, reads each batch once with one bounded collect and resolves
+  * last-writer-wins on the driver, like the reference's per-key upsert into
+  * an indexed table. Past the cap the snapshot lives in the cluster: each
+  * batch runs [[mergeCdcBatch]], whose only shuffle is the per-key
+  * last-writer-wins window, with an anti-join on the key that is broadcast
+  * when the batch is chunk-sized. With a transactional table format the
+  * merge maps to MERGE INTO.
   */
 object CdcStream {
 
@@ -91,30 +99,42 @@ object CdcStream {
       s"unknown cdc_source '$other' — valid values: kafka, file, memory")
   }
 
-  /** Reduce a CDC micro-batch to its final per-key effect, keeping the
-    * delete markers (unlike Snapshot.applyCdc, the merge needs them).
-    *
-    * Equal-ts_ms events for one key must not resolve nondeterministically
-    * (the reference applies events in change_id order; a bare ts_ms window
-    * could apply a delete instead of the later upsert). Tiebreak on the
-    * source offset when the source carries one (kafka), else on a
-    * deterministic hash of the full event — matching Snapshot.applyCdc's
-    * multi-column orderCols.
+  /** The last-writer-wins order of a CDC batch, latest first: `ts_ms`,
+    * then a tiebreak. Equal-ts_ms events for one key must not resolve
+    * nondeterministically (the reference applies events in change_id order;
+    * a bare ts_ms window could apply a delete instead of the later upsert).
+    * The tiebreak is the source offset when the source carries one (kafka),
+    * else `seq`, else a deterministic hash of the full event over the
+    * batch's own columns. Both arms of [[SnapshotHandle.merge]] order by
+    * these columns, through [[graft.state.Snapshot.latestPerKey]]'s rule.
     */
-  def lastPerKey(batch: DataFrame): DataFrame = {
+  def orderCols(batch: DataFrame): Seq[Column] = {
     val tiebreak =
       if (batch.columns.contains("offset")) col("offset").cast("long")
       else if (batch.columns.contains("seq")) col("seq").cast("long")
       else xxhash64(struct(batch.columns.toIndexedSeq.map(col): _*))
-    val w = Window.partitionBy(col("id"))
-      .orderBy(col("ts_ms").desc, tiebreak.desc)
-    batch.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    Seq(col("ts_ms"), tiebreak)
   }
+
+  /** Reduce a CDC micro-batch to its final per-key effect, keeping the
+    * delete markers (unlike Snapshot.applyCdc, the merge needs them).
+    */
+  def lastPerKey(batch: DataFrame): DataFrame =
+    Snapshot.latestPerKey(batch, Seq("id"), orderCols(batch))
 
   /** Idempotent keyed merge of one CDC batch into the snapshot:
     * c/r/u ⇒ upsert, d ⇒ delete (reference op dispatch:
     * demo_sqlite_cdc/01_unit_test/06_postgres_cdc_sink.py:32-64).
+    *
+    * Per key, the batch's latest event by [[orderCols]] decides. At the
+    * boundaries the rule is:
+    *  - a latest event with a null `op` deletes the key: the anti-join
+    *    removes it and the upsert filter drops the null op;
+    *  - a null `ts_ms` loses to any non-null `ts_ms`;
+    *  - null-id events are one group whose latest event, unless it is a
+    *    delete, adds a row each batch: the anti-join never matches a null
+    *    key, so earlier null-id rows are never replaced or deleted.
+    * [[SnapshotHandle]]'s driver arm reproduces each of these.
     */
   def mergeCdcBatch(snapshot: DataFrame, batch: DataFrame): DataFrame = {
     val last = lastPerKey(batch)
@@ -124,33 +144,122 @@ object CdcStream {
     surviving.unionByName(upserts)
   }
 
-  /** Start the sink: micro-batch merge into a driver-held snapshot handle
-    * (tests / local mode). In production the body writes to a
-    * transactional table instead; the merge plan is identical.
+  /** Start the sink: each micro-batch is merged into a driver-held
+    * snapshot handle (tests / local mode). In production the body writes
+    * to a transactional table instead.
     */
   def start(parsed: DataFrame, state: SnapshotHandle,
       triggerMs: Long = 0L): StreamingQuery = {
     val writer = parsed.writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        state.set(mergeCdcBatch(state.get(batch.sparkSession), batch))
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => state.merge(batch) }
     (if (triggerMs > 0) writer.trigger(Trigger.ProcessingTime(triggerMs))
      else writer).start()
   }
 
-  /** Snapshot holder for the local/foreachBatch sink. localCheckpoint after
-    * each merge keeps the plan from growing across micro-batches (the
-    * streaming analog of the recursion-loop lineage truncation).
+  /** The CDC snapshot (`id`, `name`) the sink merges into, in one of two
+    * arms chosen by size:
+    *  - Driver arm, while the snapshot holds at most `maxDriverRows` rows
+    *    (default [[Closure.DriverPreferredMaxEdges]]): the rows live on
+    *    the driver as a keyed map. [[merge]] reads the batch once, with
+    *    one bounded collect of `(op, id, name, ts_ms, tiebreak)`, and
+    *    resolves last-writer-wins on the driver in [[orderCols]]' order.
+    *    [[snapshot]] is a local relation, so reading it starts no job.
+    *  - Distributed arm, once the snapshot or a batch read passes the cap:
+    *    [[mergeCdcBatch]], coalesced to the session's parallelism (so the
+    *    partition count stays bounded over any number of batches) and
+    *    localCheckpointed (so the plan does not grow across batches). The
+    *    handle stays in this arm.
+    * [[set]] loads the driver arm by the same bounded collect; a snapshot
+    * with duplicate keys goes to the distributed arm, which keeps every
+    * copy until an event on the key replaces them.
     */
-  final class SnapshotHandle(spark: SparkSession) {
-    import org.apache.spark.sql.types.StructType
+  final class SnapshotHandle(spark: SparkSession,
+      maxDriverRows: Long = Closure.DriverPreferredMaxEdges) {
     private val schema = StructType.fromDDL(Debezium.rowDdl)
-    @volatile private var current: DataFrame =
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    def get(s: SparkSession): DataFrame = current
-    def set(df: DataFrame): Unit = current = df.localCheckpoint(true)
-    def snapshot: DataFrame = current
+    // Driver arm: the rows by key, plus the rows with a null key.
+    private var rows = Map.empty[Long, String]
+    private var nullIdNames = Vector.empty[String]
+    // The snapshot frame: the distributed arm's checkpoint, or the driver
+    // arm's local relation, built when first read after a change.
+    private var settled = false
+    private var frame: DataFrame = null
+
+    /** Merge one CDC micro-batch into the snapshot. */
+    def merge(batch: DataFrame): Unit = synchronized {
+      val read =
+        if (settled) None
+        else Closure.collectUnder(driverRead(batch), maxDriverRows)
+      read match {
+        case Some(events) => applyOnDriver(events)
+        case None => settle(mergeCdcBatch(snapshot, batch))
+      }
+    }
+
+    /** Replace the snapshot with the rows of `df` (`id`, `name`). */
+    def set(df: DataFrame): Unit = synchronized {
+      val idName = df.select(col("id").cast("long"), col("name").cast("string"))
+      Closure.collectUnder(idName.coalesce(1), maxDriverRows) match {
+        case Some(rs) =>
+          val (nulls, keyed) = rs.partition(_.isNullAt(0))
+          val m = keyed.map(r => r.getLong(0) -> r.getString(1)).toMap
+          if (m.size == keyed.length) {
+            rows = m
+            nullIdNames = nulls.map(_.getString(1)).toVector
+            settled = false
+            frame = null
+          } else settle(idName)
+        case None => settle(idName)
+      }
+    }
+
+    /** Whether the snapshot is held in the driver arm. */
+    private[graft] def onDriver: Boolean = synchronized(!settled)
+
+    def snapshot: DataFrame = synchronized {
+      if (frame == null) {
+        val out = new java.util.ArrayList[Row](rows.size + nullIdNames.size)
+        rows.foreach { case (k, v) => out.add(Row(k, v)) }
+        nullIdNames.foreach(v => out.add(Row(null, v)))
+        frame = spark.createDataFrame(out, schema)
+      }
+      frame
+    }
+
+    /** One read of the batch, in one job: coalescing to one partition
+      * keeps the bounded collect from scanning the batch's partitions in
+      * rounds of jobs. */
+    private def driverRead(batch: DataFrame): DataFrame =
+      batch.select(Seq(col("op"), col("id").cast("long"),
+        col("name").cast("string")) ++ orderCols(batch).map(_.cast("long")): _*)
+        .coalesce(1)
+
+    /** Last-writer-wins over `(op, id, name, ts_ms, tiebreak)` rows, by
+      * [[mergeCdcBatch]]'s rules; spills to the distributed arm past the
+      * cap. */
+    private def applyOnDriver(events: Array[Row]): Unit = {
+      def stamp(r: Row, i: Int): Option[Long] =
+        if (r.isNullAt(i)) None else Some(r.getLong(i))
+      events.groupBy(r => stamp(r, 1)).foreach { case (id, evs) =>
+        // Descending with nulls last: the maximum, with None lowest.
+        val w = evs.maxBy(r => (stamp(r, 3), stamp(r, 4)))
+        val upsert = !w.isNullAt(0) && w.getString(0) != "d"
+        id match {
+          case Some(k) => rows = if (upsert) rows.updated(k, w.getString(2)) else rows - k
+          case None => if (upsert) nullIdNames :+= w.getString(2)
+        }
+      }
+      frame = null
+      if (rows.size + nullIdNames.size > maxDriverRows) settle(snapshot)
+    }
+
+    private def settle(df: DataFrame): Unit = {
+      frame = df.coalesce(spark.sparkContext.defaultParallelism)
+        .localCheckpoint(true)
+      settled = true
+      rows = Map.empty
+      nullIdNames = Vector.empty
+    }
   }
 
   /** 3-segment latency columns (reference: 02_e2e_cdc.py:89-135 measures

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.Debezium
+import graft.graph.Closure
 import graft.streaming.CdcStream
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -68,6 +69,137 @@ class CdcStreamSpec extends AnyFunSuite {
       Seq((9L, "keep")).toDF("id", "name"), batch)
     val twice = CdcStream.mergeCdcBatch(once, batch)
     assert(once.orderBy("id").collect().sameElements(twice.orderBy("id").collect()))
+    // The handle's two arms: the same batch merged twice is merged once.
+    for (cap <- Seq(0L, Closure.DriverPreferredMaxEdges)) {
+      val h = new CdcStream.SnapshotHandle(spark, cap)
+      h.set(Seq((9L, "keep")).toDF("id", "name"))
+      h.merge(batch)
+      val first = rowsOf(h.snapshot)
+      h.merge(batch)
+      assert(rowsOf(h.snapshot) == first, s"cap $cap")
+      assert(first == Seq((1L, "b"), (9L, "keep")), s"cap $cap")
+    }
+  }
+
+  /** The snapshot's rows, sorted: (id, name), a null id as Long.MinValue. */
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.select("id", "name").collect().toSeq
+      .map(r => (if (r.isNullAt(0)) Long.MinValue else r.getLong(0), r.getString(1)))
+      .sorted
+
+  /** Flat CDC rows (op, ts_ms, id, name), nulls allowed. */
+  private def flat(evs: (String, java.lang.Long, java.lang.Long, String)*) = {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "op STRING, ts_ms BIGINT, id BIGINT, name STRING")
+    spark.createDataFrame(java.util.Arrays.asList(evs.map { case (o, t, i, n) =>
+      org.apache.spark.sql.Row(o, t, i, n) }: _*), schema)
+  }
+
+  /** Merge `batches` through mergeCdcBatch and both arms of the handle;
+    * all three must agree, and their common result is returned. */
+  private def mergeAll(init: Seq[(Long, String)],
+      batches: Seq[org.apache.spark.sql.DataFrame]): Seq[(Long, String)] = {
+    import spark.implicits._
+    val start = init.toDF("id", "name")
+    val plan = rowsOf(batches.foldLeft(start)((s, b) =>
+      CdcStream.mergeCdcBatch(s, b).localCheckpoint(true)))
+    for (cap <- Seq(0L, Closure.DriverPreferredMaxEdges)) {
+      val h = new CdcStream.SnapshotHandle(spark, cap)
+      h.set(start)
+      batches.foreach(h.merge)
+      assert(rowsOf(h.snapshot) == plan, s"cap $cap differs from mergeCdcBatch")
+    }
+    plan
+  }
+
+  test("boundary: a latest event with a null op deletes the key, in both arms") {
+    val got = mergeAll(Seq(1L -> "a", 2L -> "b"), Seq(flat(
+      ("u", 5L, 1L, "a2"), (null, 9L, 1L, "gone"), ("u", 9L, 2L, "b2"))))
+    assert(got == Seq((2L, "b2")))
+  }
+
+  test("boundary: a null ts_ms loses to any non-null ts_ms, in both arms") {
+    val got = mergeAll(Seq(1L -> "a"), Seq(flat(
+      ("u", null, 1L, "late"), ("u", Long.MinValue, 1L, "min"),
+      ("c", null, 2L, "only"))))
+    assert(got == Seq((1L, "min"), (2L, "only")))
+  }
+
+  test("boundary: null-id events add a row per batch, in both arms") {
+    val b1 = flat(("c", 1L, null, "x1"), ("c", 2L, null, "x2"))
+    val b2 = flat(("d", 3L, null, "del"))
+    val b3 = flat(("u", 4L, null, "x3"), ("c", 4L, 7L, "k"))
+    val got = mergeAll(Seq(1L -> "a"), Seq(b1, b2, b3, b1))
+    assert(got == Seq((Long.MinValue, "x2"), (Long.MinValue, "x2"),
+      (Long.MinValue, "x3"), (1L, "a"), (7L, "k")))
+  }
+
+  test("duplicate keys in a loaded snapshot keep the merge's multiset rule") {
+    val got = mergeAll(Seq(1L -> "a", 1L -> "a'", 2L -> "b", 2L -> "b'"),
+      Seq(flat(("u", 1L, 2L, "b2"))))
+    assert(got == Seq((1L, "a"), (1L, "a'"), (2L, "b2")))
+  }
+
+  test("distributed arm keeps its partition count bounded over 64 merges") {
+    import spark.implicits._
+    val bound = spark.sparkContext.defaultParallelism
+    val forced = new CdcStream.SnapshotHandle(spark, 0L)
+    val driver = new CdcStream.SnapshotHandle(spark)
+    val init = (0L until 40L).map(k => k -> s"n$k").toDF("id", "name")
+    forced.set(init)
+    driver.set(init)
+    (0 until 64).foreach { i =>
+      val b = flat(("u", i.toLong, (i % 50).toLong, s"v$i"),
+        ((if (i % 3 == 0) "d" else "c"), i.toLong, (i * 7 % 60).toLong, s"w$i"))
+      forced.merge(b)
+      driver.merge(b)
+      val parts = forced.snapshot.rdd.getNumPartitions
+      assert(parts <= bound, s"merge $i left $parts partitions (bound $bound)")
+    }
+    val hash = sum(xxhash64(col("id"), col("name")).cast("decimal(38,0)"))
+    assert(forced.snapshot.agg(hash).head() == driver.snapshot.agg(hash).head())
+    assert(rowsOf(forced.snapshot) == rowsOf(driver.snapshot))
+  }
+
+  test("driver-arm merge reads a parquet batch in one job; its snapshot in none") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("cdc-batch").toString
+    Seq(("c", 10L, 1L, "a"), ("u", 20L, 1L, "b"), ("c", 10L, 2L, "c"),
+      ("d", 30L, 3L, ""), ("c", 40L, 4L, "d"))
+      .toDF("op", "ts_ms", "id", "name").repartition(3)
+      .write.mode("overwrite").parquet(dir)
+    val batch = spark.read.parquet(dir)
+    assert(batch.rdd.getNumPartitions > 1)
+    val h = new CdcStream.SnapshotHandle(spark)
+    h.set(Seq((3L, "x"), (5L, "y")).toDF("id", "name"))
+    val merge = JobWatch(spark)(h.merge(batch))
+    assert(merge == JobWatch.Counts(1, 1), s"driver-arm merge: $merge")
+    val read = JobWatch(spark)(assert(rowsOf(h.snapshot) ==
+      Seq((1L, "b"), (2L, "c"), (4L, "d"), (5L, "y"))))
+    assert(read == JobWatch.Counts(0, 0), s"snapshot read: $read")
+    val forced = new CdcStream.SnapshotHandle(spark, 0L)
+    forced.set(Seq((3L, "x"), (5L, "y")).toDF("id", "name"))
+    val dist = JobWatch(spark)(forced.merge(batch))
+    assert(dist.jobs > merge.jobs, s"distributed-arm merge: $dist")
+    assert(rowsOf(forced.snapshot) == rowsOf(h.snapshot))
+  }
+
+  test("the sink reads each micro-batch once: input rows equal events") {
+    val watch = java.nio.file.Files.createTempDirectory("cdc-watch").toFile
+    (0 until 3).foreach { f =>
+      java.nio.file.Files.writeString(new java.io.File(watch, s"f$f.json").toPath,
+        (0 until 5).map(i => env("c", f * 10L + i, s"n$i", 100L + i))
+          .mkString("", "\n", "\n"))
+    }
+    val cfg = GraftConfig(cdcSource = "file", cdcSourcePath = watch.getPath,
+      cdcMaxFilesPerTrigger = 1)
+    val state = new CdcStream.SnapshotHandle(spark)
+    val q = CdcStream.start(CdcStream.parse(CdcStream.source(spark, cfg)), state)
+    q.processAllAvailable()
+    q.stop()
+    val rows = q.recentProgress.map(_.numInputRows).filter(_ > 0)
+    assert(rows.toSeq == Seq(5L, 5L, 5L), s"input rows per batch: ${rows.toSeq}")
+    assert(state.snapshot.count() == 15)
   }
 
   test("debezium parse round-trips the envelope builder") {
@@ -161,7 +293,7 @@ class CdcStreamSpec extends AnyFunSuite {
           crashed = true
           throw new RuntimeException("injected crash")
         }
-        state.set(CdcStream.mergeCdcBatch(state.get(batch.sparkSession), batch))
+        state.merge(batch)
       }.start()
     val q1 = startQ()
     val failed = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {

@@ -29,10 +29,11 @@ import org.apache.spark.sql.functions._
   * explicit cap, the same bounded-driver-read contract as the IVF
   * centroid ranking (Similarity.ivfTopK).
   *
-  * Reference semantics: path COUNTS, not reachability — a diamond
-  * contributes 2 (matches Traverse.expand's bag UNION ALL; reference
-  * counts paths at demo_did_graph/04_web_of_trust/
-  * benchmark_scenario_a.py:267-278).
+  * Reference semantics: walk COUNTS, not reachability — a diamond
+  * contributes 2 (the reference counts the rows of a bag UNION ALL at
+  * demo_did_graph/04_web_of_trust/benchmark_scenario_a.py:267-278). Both
+  * tiers and [[Traverse.expand]]'s `n` sum the same multiplicities: the
+  * walk and the BFS ([[walksFrom]]) each sum their frontier per node.
   */
 object Closure {
 
@@ -247,7 +248,7 @@ object Closure {
       maxDepth)
 
   /** Rooted walk count on the driver tier: the number of walks of length
-    * 1..maxDepth from `root` — `count(*)` over [[Traverse.expand]] from a
+    * 1..maxDepth from `root` — `sum(n)` over [[Traverse.expand]] from a
     * one-row seed — or None when `edges` holds more than `maxEdges` rows
     * and the caller must walk. One bounded collect is both the size probe
     * and the read; the count comes from the same BFS as the closure, with

@@ -991,17 +991,17 @@ object Dedup {
     * — the near-dup PAIR list is usually dimension-shaped even when the
     * corpus is not, because most documents have no near-duplicate at
     * all); anything bigger runs the distributed delta iteration
-    * ([[components]]). The size probe is a bounded count, not a collect.
+    * ([[components]]). One bounded collect is both the size probe and the
+    * union-find's read.
     */
   def componentsAuto(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b",
       maxDriverPairs: Long = DefaultMaxDriverPairs): DataFrame = {
-    val cap = math.min(maxDriverPairs, (Int.MaxValue - 1).toLong).toInt
-    val atomicIds =
-      atomicIdType(pairs.select(col(aCol)).schema.fields(0).dataType)
-    if (atomicIds && pairs.limit(cap + 1).count() <= maxDriverPairs)
-      componentsSmall(pairs, aCol, bCol, maxDriverPairs)
-    else components(pairs, aCol, bCol)
+    val projected = pairs.select(col(aCol), col(bCol))
+    val small =
+      if (!atomicIdType(projected.schema.fields(0).dataType)) None
+      else graft.graph.Closure.collectUnder(projected, maxDriverPairs)
+    small.fold(components(pairs, aCol, bCol))(unionFind(projected, _))
   }
 
   /** Driver union-find tier of [[componentsAuto]] — identical output
@@ -1016,13 +1016,19 @@ object Dedup {
   def componentsSmall(pairs: DataFrame, aCol: String = "doc_a",
       bCol: String = "doc_b",
       maxPairs: Long = DefaultMaxDriverPairs): DataFrame = {
+    val projected = pairs.select(col(aCol), col(bCol))
+    unionFind(projected, graft.graph.Closure.collectUnder(projected, maxPairs)
+      .getOrElse(throw new IllegalArgumentException(
+        s"componentsSmall: pair list exceeds $maxPairs — use components")))
+  }
+
+  /** The union-find over `projected`'s collected (a, b) pair `rows`. */
+  private def unionFind(projected: DataFrame,
+      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    val spark = pairs.sparkSession
-    val cap = math.min(maxPairs, (Int.MaxValue - 1).toLong).toInt
-    val projected = pairs.select(col(aCol), col(bCol)).limit(cap + 1)
     val nodeType = projected.schema.fields(0).dataType
     require(projected.schema.fields(1).dataType == nodeType,
-      s"componentsSmall: $aCol and $bCol must share a type")
+      s"componentsSmall: ${projected.columns.mkString(" and ")} must share a type")
     // min(lab) in the distributed tier is Catalyst's ordering; for atomic
     // id types (string/int/long/decimal/date) the external values'
     // natural Comparable order is that same order. Complex-typed ids
@@ -1034,9 +1040,7 @@ object Dedup {
       def compare(x: Any, y: Any): Int =
         x.asInstanceOf[Comparable[Any]].compareTo(y)
     }
-    val es = projected.collect().map(r => (r.get(0), r.get(1)))
-    require(es.length <= maxPairs,
-      s"componentsSmall: pair list exceeds $maxPairs — use components")
+    val es = rows.map(r => (r.get(0), r.get(1)))
     val id = scala.collection.mutable.HashMap[Any, Int]()
     val nodes = scala.collection.mutable.ArrayBuffer[Any]()
     val parent = scala.collection.mutable.ArrayBuffer[Int]()
@@ -1063,11 +1067,11 @@ object Dedup {
       val n = nodes(i)
       if (!minOf.get(r).exists(m => ord.lteq(m, n))) minOf(r) = n
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](nodes.length)
+    val out = new java.util.ArrayList[org.apache.spark.sql.Row](nodes.length)
     nodes.indices.foreach { i =>
-      rows.add(org.apache.spark.sql.Row(nodes(i), minOf(find(i))))
+      out.add(org.apache.spark.sql.Row(nodes(i), minOf(find(i))))
     }
-    spark.createDataFrame(rows, StructType(Seq(
+    projected.sparkSession.createDataFrame(out, StructType(Seq(
       StructField("node", nodeType, nullable = false),
       StructField("lab", nodeType, nullable = false))))
   }

@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   * §2.5 R1-R5) over the graph encodings in [[graft.graph.GraphData]], each
   * with a recursive-CTE DuckDB oracle on the same parquet tables.
   *
-  * All traversals use [[graft.graph.Traverse.expand]] — bag/path semantics
-  * (UNION ALL, no dedup) exactly like the reference's `WITH RECURSIVE` and
-  * Cypher `*1..d` constructs.
+  * Traversals use [[graft.graph.Traverse.expand]], or the closure tiers of
+  * [[graft.graph.Closure]] for dimension-sized graphs — bag/path semantics
+  * (UNION ALL, no dedup) like the reference's `WITH RECURSIVE` and Cypher
+  * `*1..d` constructs, with each walk row standing for `n` walks: the
+  * counting queries sum `n` where the reference counts rows.
   */
 object GraphQueries {
 
@@ -70,7 +72,7 @@ object GraphQueries {
   def r1ChainLevels(spark: SparkSession, d: String): DataFrame =
     Traverse.expand(seed(spark, "R0"),
         GraphData.hierarchyEdges(spark, d).drop("child_type"), maxDepth = 3)
-      .groupBy(col("lvl")).agg(count(lit(1)).as("n"))
+      .groupBy(col("lvl")).agg(sum(col("n")).as("n"))
       .orderBy(col("lvl"))
 
   /** R1 via native `WITH RECURSIVE` (SPARK-24497): the same chain as
@@ -80,11 +82,13 @@ object GraphQueries {
     */
   def r1ChainLevelsRcte(spark: SparkSession, d: String): DataFrame = {
     val edges = GraphData.hierarchyEdges(spark, d).drop("child_type")
-    val chain =
+    val perLevel =
       if (Traverse.nativeRcteSupported(spark))
         Traverse.expandRcte(spark, edges, "R0", maxDepth = 3)
+          .groupBy(col("lvl")).agg(count(lit(1)).as("n"))
       else Traverse.expand(seed(spark, "R0"), edges, maxDepth = 3)
-    chain.groupBy(col("lvl")).agg(count(lit(1)).as("n")).orderBy(col("lvl"))
+          .groupBy(col("lvl")).agg(sum(col("n")).as("n"))
+    perLevel.orderBy(col("lvl"))
   }
 
   /** R2: Cypher-style var-length `*1..4` with endpoint label filter
@@ -94,7 +98,7 @@ object GraphQueries {
     Traverse.expand(seed(spark, "R0"),
         GraphData.hierarchyEdges(spark, d), maxDepth = 4)
       .filter(col("child_type") === "Line")
-      .agg(count(lit(1)).as("n"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("n"))
 
   /** R5: role-tagged full-hierarchy expansion — carries the edge's
     * `child_type` payload, counts per (role, lvl)
@@ -103,7 +107,7 @@ object GraphQueries {
   def r5RoleTagged(spark: SparkSession, d: String): DataFrame =
     Traverse.expand(seed(spark, "R0"),
         GraphData.hierarchyEdges(spark, d), maxDepth = 4)
-      .groupBy(col("child_type"), col("lvl")).agg(count(lit(1)).as("n"))
+      .groupBy(col("child_type"), col("lvl")).agg(sum(col("n")).as("n"))
       .orderBy(col("child_type"), col("lvl"))
 
   /** J8/Q4 (flagship): var-length path to the drone level, then reverse
@@ -116,11 +120,11 @@ object GraphQueries {
     val drones = Traverse.expand(seed(spark, "R0"),
         GraphData.hierarchyEdges(spark, d), maxDepth = 3)
       .filter(col("child_type") === "Order")
-      .select(col("node"))
+      .select(col("node"), col("n"))
     val vc = Tables.lineitem(spark, d)
       .select(concat(lit("O"), col("l_orderkey").cast("string")).as("onode"))
     drones.join(vc, drones("node") === vc("onode"))
-      .agg(count(lit(1)).as("vc_count"))
+      .agg(coalesce(sum(col("n")), lit(0L)).as("vc_count"))
   }
 
   /** J7: fixed 2-hop graph pattern (Issuer -ISSUED-> VC -ASSERTS-> Subject
@@ -157,12 +161,9 @@ object GraphQueries {
         closure.filter(col("src") === "E0" && col("dst") === "E15")
           .agg(coalesce(sum(col("n_paths")), lit(0L)).as("n_paths"))
       case None =>
-        // expectTinyFrontier: the trust chain is linear — every frontier
-        // is one row (see Traverse scaladoc; hint is probe-corrected).
-        Traverse.expand(seed(spark, "E0"), chain,
-            maxDepth = 20, expectTinyFrontier = true)
+        Traverse.expand(seed(spark, "E0"), chain, maxDepth = 20)
           .filter(col("node") === "E15")
-          .agg(count(lit(1)).as("n_paths"))
+          .agg(coalesce(sum(col("n")), lit(0L)).as("n_paths"))
     }
   }
 
@@ -185,12 +186,14 @@ object GraphQueries {
   /** R3 with materialized paths: the Cypher `RETURN path` surface —
     * enumerate the actual trust paths from the client toward the anchor
     * (reference shape: demo_did_graph/04_web_of_trust/
-    * benchmark_scenario_d.py:200-203, which counts `path` objects).
+    * benchmark_scenario_d.py:200-203, which counts `path` objects). A row
+    * is repeated `n` times, one per walk, as the reference's bag lists it.
     */
   def r3WotPathList(spark: SparkSession, d: String): DataFrame =
     Traverse.expand(seed(spark, "E0"), GraphData.trustChain(spark, d),
-        maxDepth = 8, keepPaths = true,
-        expectTinyFrontier = true) // linear chain, one-row frontiers
+        maxDepth = 8, keepPaths = true)
+      .select(col("path"), col("node"), col("lvl"),
+        explode(sequence(lit(1L), col("n"))))
       .select(col("path"), col("node"), col("lvl"))
       .orderBy(col("lvl"))
 
@@ -246,7 +249,7 @@ object GraphQueries {
     *   - distributed tier (under `maxDistributedEdges`): the closure frame
     *     joined to the permission rows, with the lvl-0 self grant, as ONE
     *     broadcast over a single scan of the membership side;
-    *   - else the [[Traverse.expand]] frontier walk, one job per level.
+    *   - else the [[Traverse.expand]] frontier walk, its `n` summed.
     * Every arm returns the same schema and rows.
     */
   def abacDecision(member: DataFrame, subgroup: DataFrame, perm: DataFrame,
@@ -284,12 +287,10 @@ object GraphQueries {
         }
       case Some(Right(closure)) => overClosure(closure)
       case None =>
-        val reach = users.withColumn("lvl", lit(0))
-          .union(Traverse.expand(users, subgroup, maxDepth = maxDepth,
-            expectTinyFrontier = true))
-        // sum, not count: the closure arms' nullable `n`.
+        val reach = users.withColumn("lvl", lit(0)).withColumn("n", lit(1L))
+          .union(Traverse.expand(users, subgroup, maxDepth = maxDepth))
         reach.join(perm, reach("node") === perm("group_id"))
-          .groupBy(col("user_id")).agg(sum(lit(1L)).as("n"))
+          .groupBy(col("user_id")).agg(sum(col("n")).as("n"))
           .orderBy(col("user_id"))
     }
   }

@@ -35,8 +35,8 @@ import org.apache.spark.sql.functions._
   * (no shuffle). The chain count picks its plan from the snapshot's size:
   * up to [[graft.graph.Closure.DriverPreferredMaxEdges]] edges it collects
   * them once and walks from the root on the driver; past that gate the
-  * per-level [[graft.graph.Traverse.expand]] joins broadcast the frontier
-  * under AQE and nothing collects to the driver. At 100 TB the delegation
+  * [[graft.graph.Traverse.expand]] walk sums its per-node walk counts level
+  * by level in Spark and nothing collects to the driver. At 100 TB the delegation
   * snapshot would live as a bucketed table keyed on `hq_id`; the step
   * rewrites stay map-side.
   */
@@ -103,16 +103,16 @@ object DynamicReplay {
       col("drone_id").cast("string").as("child"))
 
   /** The reference bench query: depth-bounded recursive chain count from a
-    * root (common/bench_utils.py:9-34). One row, `n` = reachable drones
-    * within `depth` hops — bag semantics, `count(*)` over the walks of
-    * [[Traverse.expand]].
+    * root (common/bench_utils.py:9-34). One row, `n` = the walks of length
+    * 1..`depth` from the root — bag semantics, the reference's `count(*)`
+    * over its `UNION ALL` rows (the reachable drones, on a forest).
     *
     * Two tiers, gated on the snapshot's size:
     *   - up to `maxEdges` edges: one `limit(maxEdges + 1)` collect, which
     *     is also the size probe, then [[Closure.walkCountFrom]]'s BFS from
     *     the root on the driver; the answer is a one-row local frame;
-    *   - past it: the [[Traverse.expand]] walk, one Spark job or more per
-    *     level, over the same edges.
+    *   - past it: the [[Traverse.expand]] walk over the same edges, its
+    *     `n` summed.
     * Both return the same `n bigint not null` row. `maxEdges = 0` forces
     * the walk over any non-empty snapshot, a negative cap over every one.
     */
@@ -127,14 +127,9 @@ object DynamicReplay {
     import spark.implicits._
     Closure.walkCountFrom(e, root, depth, maxEdges = maxEdges) match {
       case Some(n) => Seq(n).toDF("n")
-      // expectTinyFrontier: the delegation forest has bounded fanout
-      // (every frontier is at most the modular-family size), so the walk
-      // skips the per-level caches — recompute of tiny joins is cheaper
-      // (measured ~20% of a rewire replay cycle).
       case None =>
-        Traverse.expand(Seq(root).toDF("node"), e, maxDepth = depth,
-            expectTinyFrontier = true)
-          .agg(count(lit(1)).as("n"))
+        Traverse.expand(Seq(root).toDF("node"), e, maxDepth = depth)
+          .agg(coalesce(sum(col("n")), lit(0L)).as("n"))
     }
   }
 

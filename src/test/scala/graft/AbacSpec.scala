@@ -68,10 +68,7 @@ class AbacSpec extends AnyFunSuite {
       members <- Gen.choose(0, 8).flatMap(Gen.listOfN(_,
         Gen.zip(Gen.oneOf(users), Gen.oneOf(pool :+ "nowhere"))))
       perms <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, Gen.oneOf(pool)))
-      // Shallow: the walk arm expands every walk as a row, and duplicate
-      // self-loops make that exponential in the depth. The tangled
-      // graph below covers depth 10.
-      depth <- Gen.choose(1, 3)
+      depth <- Gen.choose(1, 10)
     } yield (members, edges, perms, depth)
     val generated = (1 to 12).flatMap(i =>
       caseGen(Gen.Parameters.default, Seed(601L + i)))

@@ -33,7 +33,7 @@ class ChainCountSpec extends AnyFunSuite {
       edges <- Gen.choose(0, 10).flatMap(Gen.listOfN(_,
         Gen.zip(Gen.oneOf(pool.toSeq), Gen.oneOf(pool.toSeq))))
       root <- Gen.oneOf(pool.filter(_ != null).toSeq :+ "absent")
-      depth <- Gen.choose(1, 4)
+      depth <- Gen.choose(1, 10)
     } yield (edges, root, depth)
     val generated = (1 to 14).flatMap(i =>
       graphGen(Gen.Parameters.default, Seed(307L + i)))
@@ -71,9 +71,13 @@ class ChainCountSpec extends AnyFunSuite {
 
   test("a dense graph overflows loudly on the driver tier, never wraps") {
     // 20 self-loops: 20^lvl walks end at r, past Long range at lvl 15.
+    // The forced walk's ANSI sum fails as loudly as the driver BFS.
     val loops = delegation(Seq.fill(20)(("r", "r")))
     intercept[ArithmeticException](
       DynamicReplay.chainCount(spark, loops, 16, "r").collect())
+    intercept[ArithmeticException](
+      DynamicReplay.chainCount(spark, loops, 16, "r", maxEdges = -1L).collect())
+    CacheRegistry.releaseAll()
     // r → K4 with self-loops: 4^(lvl-1) walks end at each node, inside
     // Long range at lvl 32, but the walks over all levels are not.
     val k4 = Seq("a", "b", "c", "d")

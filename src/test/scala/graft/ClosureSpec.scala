@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closure correctness: bag path multiplicities must equal the expanded
-  * frontier walk's row counts — the closure is a physical rewrite of the
+  * frontier walk's summed `n` — the closure is a physical rewrite of the
   * walk, never a semantic change. The reference is [[enumerate]], a
   * brute-force walk enumerator that shares no code with either tier.
   */
@@ -74,7 +74,7 @@ class ClosureSpec extends AnyFunSuite {
       val index = Closure.closureIndex(e, maxDepth = 4)
       nodes.take(3).foreach { src =>
         val walked = Traverse.expand(Seq(src).toDF("node"), e, maxDepth = 4)
-          .groupBy("node").count()
+          .groupBy("node").agg(org.apache.spark.sql.functions.sum("n"))
           .as[(String, Long)].collect().toMap
         CacheRegistry.releaseAll()
         val fromIndex = nodes.map(d => d -> index.pathCount(src, d, 4))
@@ -163,9 +163,9 @@ class ClosureSpec extends AnyFunSuite {
     val es = Seq[(String, String)](("a", null), (null, "b"), ("b", "c"))
     val e = es.toDF("parent", "child")
     val walked = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 3)
-      .as[(String, Int)].collect().toSeq
+      .as[(String, Int, Long)].collect().toSeq
     CacheRegistry.releaseAll()
-    assert(walked == Seq((null, 1)))
+    assert(walked == Seq((null, 1, 1L)))
     val want = enumerate(es, 3)
     assert(want == Set(("a", null, 1, 1L), (null, "b", 1, 1L),
       (null, "c", 2, 1L), ("b", "c", 1, 1L)))

@@ -45,15 +45,41 @@ class ConfigAndSinksSpec extends AnyFunSuite {
   test("native rcte expansion matches the iterative loop") {
     import spark.implicits._
     assume(Traverse.nativeRcteSupported(spark))
+    // The loop's walks per level, summed, against the rCTE's rows.
+    def agree(edges: org.apache.spark.sql.DataFrame, root: String,
+        depth: Int): Unit = {
+      val loop = Traverse.expand(Seq(root).toDF("node"), edges, depth)
+        .groupBy("lvl").agg(sum("n")).orderBy("lvl")
+        .as[(Int, Long)].collect().toSeq
+      val rcte = Traverse.expandRcte(spark, edges, root, depth)
+        .groupBy("lvl").count().orderBy("lvl")
+        .as[(Int, Long)].collect().toSeq
+      assert(loop == rcte)
+      graft.CacheRegistry.releaseAll()
+    }
     val sf = "/root/testdata/sf0.001"
-    val edges = GraphData.hierarchyEdges(spark, sf).drop("child_type")
-    val loop = Traverse.expand(Seq("R0").toDF("node"), edges, 3)
-      .groupBy("lvl").count().orderBy("lvl")
-      .as[(Int, Long)].collect().toSeq
-    val rcte = Traverse.expandRcte(spark, edges, "R0", 3)
-      .groupBy("lvl").count().orderBy("lvl")
-      .as[(Int, Long)].collect().toSeq
-    assert(loop == rcte)
+    agree(GraphData.hierarchyEdges(spark, sf).drop("child_type"), "R0", 3)
+    // Generated graphs past the forest: edges drawn with replacement from
+    // a small pool give duplicates, self-loops and cycles.
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val ids = Seq("R0", "a", "b", "é", "节点", "w" * 300)
+    val caseGen = for {
+      pool <- Gen.choose(2, 5).flatMap(Gen.pick(_, ids)).map(_.toSeq :+ "R0")
+      edges <- Gen.choose(1, 10).flatMap(Gen.listOfN(_,
+        Gen.zip(Gen.oneOf(pool), Gen.oneOf(pool))))
+      depth <- Gen.choose(1, 5)
+    } yield (edges, depth)
+    val generated = (1 to 8).flatMap(i =>
+      caseGen(Gen.Parameters.default, Seed(701L + i)))
+    val cyclic = Seq(("R0", "a"), ("R0", "a"), ("a", "a"), ("a", "b"),
+      ("b", "R0"))
+    val cases = generated :+ ((cyclic, 6))
+    assert(generated.exists(c => c._1.distinct.size < c._1.size))
+    assert(generated.exists(_._1.exists(e => e._1 == e._2)))
+    for ((es, depth) <- cases) withClue(s"depth $depth edges $es: ") {
+      agree(es.toDF("parent", "child"), "R0", depth)
+    }
   }
 
   test("rcte edge-checkpoint memo never serves a foreign edge set") {

@@ -226,6 +226,21 @@ class PipelineSpec extends AnyFunSuite {
     graft.CacheRegistry.releaseAll()
   }
 
+  test("a driver-tier componentsAuto reads its pairs once") {
+    // The bounded collect is its own size probe: no count job before it.
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_once").toString
+    Seq(("d10", "d2"), ("d2", "d03"), ("x1", "x2")).toDF("doc_a", "doc_b")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val pairs = spark.read.parquet(dir)
+    var comp: org.apache.spark.sql.DataFrame = null
+    val auto = JobWatch(spark) { comp = Dedup.componentsAuto(pairs) }
+    assert(comp.as[(String, String)].collect().toMap == Map("d10" -> "d03", "d2" -> "d03", "d03" -> "d03",
+      "x1" -> "x1", "x2" -> "x1"))
+    val collect = JobWatch(spark)(pairs.select("doc_a", "doc_b")
+      .limit(Dedup.DefaultMaxDriverPairs.toInt + 1).collect())
+    assert(auto.jobs <= collect.jobs, s"componentsAuto $auto vs one collect $collect")
+  }
+
   test("hash sampling is content-deterministic, order- and partition-blind") {
     import graft.pipeline.Sampling
     val docs = (0 until 400)

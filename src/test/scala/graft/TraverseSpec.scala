@@ -28,6 +28,10 @@ class TraverseSpec extends AnyFunSuite {
   private def edges(pairs: (String, String)*) =
     pairs.toDF("parent", "child")
 
+  /** The walks `out`'s rows stand for: `sum(n)`, 0 when there are none. */
+  private def walks(out: org.apache.spark.sql.DataFrame): Long =
+    out.agg(coalesce(sum($"n"), lit(0L))).as[Long].head()
+
   test("linear chain: one path per level") {
     val e = edges("a" -> "b", "b" -> "c", "c" -> "d")
     val out = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 5)
@@ -39,12 +43,12 @@ class TraverseSpec extends AnyFunSuite {
     // a -> b -> d ; a -> c -> d : two distinct paths, no dedup.
     val e = edges("a" -> "b", "a" -> "c", "b" -> "d", "c" -> "d")
     val out = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 2)
-    assert(out.filter($"node" === "d").count() == 2)
+    assert(walks(out.filter($"node" === "d")) == 2)
   }
 
   test("payload/carry columns shadowing node or lvl are rejected up front") {
-    // The cached-level frontier projects by bare name; a payload column
-    // named like nodeCol, or a carry named 'lvl', would hit
+    // The frontier projects by bare name; a payload column named like
+    // nodeCol, or a carry named 'lvl' or 'n', would hit
     // AMBIGUOUS_REFERENCE mid-loop. Must fail fast with a named error.
     val ePayload = Seq(("a", "b", "x")).toDF("parent", "child", "node")
     val e1 = intercept[IllegalArgumentException] {
@@ -56,58 +60,29 @@ class TraverseSpec extends AnyFunSuite {
       Traverse.expand(seedLvl, edges("a" -> "b"), maxDepth = 2)
     }
     assert(e2.getMessage.contains("reserved"), e2.getMessage)
-  }
-
-  test("wrong expectTinyFrontier hint: counted, probe-corrected, cost bounded to one cadence window") {
-    // Broad 2-level fan-out (50 then 1000 nodes) with probeThreshold=10:
-    // hinting tiny here is WRONG. The contract: (a) the contradiction is
-    // counted; (b) semantics are unchanged; (c) only the levels inside the
-    // first cadence window (checkpointEvery=2 → levels 1,2) lose their
-    // cache — after the first probe corrects the hint, caching resumes,
-    // so the wrong-hint run plants exactly 2 fewer per-level caches than
-    // the unhinted run. That pins the worst-case recompute of a wrong
-    // hint at sum(1..checkpointEvery) uncached edge probes.
-    val fan = ((1 to 50).map(i => ("s", s"c$i")) ++
-      (for { i <- 1 to 50; j <- 1 to 20 } yield (s"c$i", s"c${i}_$j"))).toSeq
-    val e = fan.toDF("parent", "child")
-    val seed = Seq("s").toDF("node")
-    def run(hint: Boolean): (Set[(String, Int)], Int, Long) = {
-      CacheRegistry.releaseAll()
-      val before = Traverse.hintContradictedCount.get
-      val out = Traverse.expand(seed, e, maxDepth = 4, checkpointEvery = 2,
-        probeThreshold = 10, expectTinyFrontier = hint)
-        .select("node", "lvl").as[(String, Int)].collect().toSet
-      (out, CacheRegistry.size, Traverse.hintContradictedCount.get - before)
+    val seedN = Seq(("a", 9L)).toDF("node", "n")
+    val e3 = intercept[IllegalArgumentException] {
+      Traverse.expand(seedN, edges("a" -> "b"), maxDepth = 2)
     }
-    val (unhinted, unhintedRegs, unhintedHits) = run(hint = false)
-    val (hinted, hintedRegs, hintedHits) = run(hint = true)
-    assert(hinted == unhinted, "semantics must not depend on the hint")
-    assert(unhintedHits == 0L)
-    assert(hintedHits == 1L, "wrong hint must be counted at the first probe")
-    assert(hintedRegs == unhintedRegs - 2,
-      s"only the first cadence window (2 levels) may go uncached: " +
-        s"hinted=$hintedRegs unhinted=$unhintedRegs")
-    // A RIGHT hint (genuinely tiny linear walk) is never counted.
-    val chain = edges("a" -> "b", "b" -> "c", "c" -> "d", "d" -> "e")
-    val before = Traverse.hintContradictedCount.get
-    Traverse.expand(Seq("a").toDF("node"), chain, maxDepth = 4,
-      checkpointEvery = 2, expectTinyFrontier = true)
-      .count()
-    assert(Traverse.hintContradictedCount.get == before)
-    CacheRegistry.releaseAll()
+    assert(e3.getMessage.contains("reserved"), e3.getMessage)
+    val payloadN = Seq(("a", "b", 1L)).toDF("parent", "child", "n")
+    val e4 = intercept[IllegalArgumentException] {
+      Traverse.expand(Seq("a").toDF("node"), payloadN, maxDepth = 2)
+    }
+    assert(e4.getMessage.contains("reserved"), e4.getMessage)
   }
 
   test("cycle: duplicates exactly up to the depth bound (no visited set)") {
     val e = edges("a" -> "b", "b" -> "a")
     val out = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 4)
-    // paths: b(1), a(2), b(3), a(4) — one row per level
-    assert(out.count() == 4)
+    // paths: b(1), a(2), b(3), a(4) — one walk per level
+    assert(walks(out) == 4)
   }
 
   test("depth monotonicity: result(d) subset of result(d+1)") {
     val e = edges("a" -> "b", "b" -> "c", "b" -> "d", "c" -> "e")
-    val d2 = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 2).count()
-    val d3 = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 3).count()
+    val d2 = walks(Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 2))
+    val d3 = walks(Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 3))
     assert(d2 <= d3)
   }
 
@@ -129,9 +104,13 @@ class TraverseSpec extends AnyFunSuite {
 
   test("early exit stops at fixpoint before the bound") {
     val e = edges("a" -> "b")
-    val out = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 100,
-      checkpointEvery = 1)
-    assert(out.count() == 1)
+    CacheRegistry.releaseAll()
+    val out = Traverse.expand(Seq("a").toDF("node"), e, maxDepth = 100)
+    // The edge cache and one cache per level walked: the first cadence
+    // checkpoint sees the empty frontier and ends the walk.
+    assert(CacheRegistry.size < 10, s"${CacheRegistry.size} caches planted")
+    assert(walks(out) == 1)
+    CacheRegistry.releaseAll()
   }
 
   test("carry and payload columns propagate") {
